@@ -2,6 +2,7 @@ package graft
 
 import graft.core.Intervals
 import graft.operators.{AsOfJoin, Dedup, HtaService, Ingest, Layout, Multimodal, Similarity, TextAnalysis}
+import graft.operators.Similarity.{Ann, Coarse, Code}
 import graft.oracle.{OracleSql, OracleSqlExt}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -933,28 +934,33 @@ object SparkEntry {
         .orderBy("threshold")),
     // X3: brute-force cosine top-k (exact integer-quantized dot products)
     "x24_cosine_topk" -> ((s, dir) =>
-      Similarity.topKBrute(Tables.read(s, dir, "embeddings"), Seq(0L, 1L, 2L), 5)
+      Similarity.topK(Tables.read(s, dir, "embeddings"),
+        Ann(Coarse.All, Code.Cosine), Seq(0L, 1L, 2L), 5)
         .orderBy("q_id", "rank")),
     // X3: IVF-cell-restricted top-k (label = centroid assignment)
     "x25_cosine_ivf" -> ((s, dir) =>
-      Similarity.topKIvf(Tables.read(s, dir, "embeddings"), Seq(0L, 1L, 2L), 5)
+      Similarity.topK(Tables.read(s, dir, "embeddings"),
+        Ann(Coarse.Cell, Code.Cosine), Seq(0L, 1L, 2L), 5)
         .orderBy("q_id", "rank")),
     // X24 ANN quality audit: recall@5 of the IVF path vs brute-force
     // ground truth — the production gate before trusting cell pruning
     "x88_ann_recall" -> ((s, dir) =>
-      Similarity.annRecall(Tables.read(s, dir, "embeddings"), Seq(0L, 1L, 2L), 5)
+      Similarity.recall(Tables.read(s, dir, "embeddings"),
+        Ann(Coarse.Cell, Code.Cosine), Seq(0L, 1L, 2L), 5)
         .orderBy("q_id")),
     // X3s sign-LSH bucketed ANN: data-derived difference hyperplanes
     // (no RNG), exact int64 sign bits, 4 tables × 4 bits, OR-of-tables
     // candidates, exact-cosine re-rank — the clustering-free scale path
     "x170_signlsh_topk" -> ((s, dir) =>
-      Similarity.topKSignLsh(Tables.read(s, dir, "embeddings"),
-        Seq(0L, 1L, 2L), 5, tables = 16).orderBy("q_id", "rank")),
+      Similarity.topK(Tables.read(s, dir, "embeddings"),
+        Ann(Coarse.SignLsh(tables = 16), Code.Cosine), Seq(0L, 1L, 2L), 5)
+        .orderBy("q_id", "rank")),
     // X3s recall audit: sign-LSH vs brute force — the number that
     // justifies (or rejects) the banding parameters on THIS corpus
     "x171_signlsh_recall" -> ((s, dir) =>
-      Similarity.signLshRecall(Tables.read(s, dir, "embeddings"),
-        Seq(0L, 1L, 2L), 5, tables = 16).orderBy("q_id")),
+      Similarity.recall(Tables.read(s, dir, "embeddings"),
+        Ann(Coarse.SignLsh(tables = 16), Code.Cosine), Seq(0L, 1L, 2L), 5)
+        .orderBy("q_id")),
     // X3b product quantization: per-(vector, subspace) codeword +
     // exact int64 quantization error — 32× index compression
     "x114_pq_codes" -> ((s, dir) =>
@@ -963,7 +969,8 @@ object SparkEntry {
     // X3b asymmetric-distance top-k over the PQ codes (the scan never
     // touches original vectors — the point of PQ at 100 TB)
     "x115_pq_adc_topk" -> ((s, dir) =>
-      Similarity.topKPqAdc(Tables.read(s, dir, "embeddings"), Seq(0L, 1L, 2L), 5)
+      Similarity.topK(Tables.read(s, dir, "embeddings"),
+        Ann(Coarse.All, Code.Pq()), Seq(0L, 1L, 2L), 5)
         .orderBy("q_id", "rank")),
     // X3f scalar (8-bit) quantization codes: the SQ leg of the
     // compression family next to PQ — per-dim affine 0..255 codes from
@@ -974,56 +981,61 @@ object SparkEntry {
     // X3f+X24 SQ recall audit: SDC (both sides quantized) top-k over
     // the code vectors vs exact L2 truth — what 8x compression costs
     "x142_sq_recall" -> ((s, dir) =>
-      Similarity.sqRecall(Tables.read(s, dir, "embeddings"), Seq(0L, 1L, 2L), 5)
+      Similarity.recall(Tables.read(s, dir, "embeddings"),
+        Ann(Coarse.All, Code.Sq), Seq(0L, 1L, 2L), 5)
         .orderBy("q_id")),
     // X3f+X3 IVF-SQ composed search (FAISS IndexIVFScalarQuantizer):
     // coarse cell prune x SDC over codes — the scan touches an
     // 8x-smaller representation of one cell only
     "x146_ivf_sq_topk" -> ((s, dir) =>
-      Similarity.topKIvfSq(Tables.read(s, dir, "embeddings"), Seq(0L, 1L, 2L), 5)
+      Similarity.topK(Tables.read(s, dir, "embeddings"),
+        Ann(Coarse.Cell, Code.Sq), Seq(0L, 1L, 2L), 5)
         .orderBy("q_id", "rank")),
     // X3f+X3 multi-probe IVF-SQ: the recall/cost knob on the composed
     // index — SDC over each query's 2 nearest coarse cells (nprobe is
     // THE axis a FAISS-style deployment tunes here; nprobe >= |cells|
     // degenerates to un-pruned SDC, spec-pinned)
     "x147_ivf_sq_probed" -> ((s, dir) =>
-      Similarity.topKIvfSqProbed(Tables.read(s, dir, "embeddings"),
-        Seq(0L, 1L, 2L), 5, nprobe = 2)
+      Similarity.topK(Tables.read(s, dir, "embeddings"),
+        Ann(Coarse.Probe(2), Code.Sq), Seq(0L, 1L, 2L), 5)
         .orderBy("q_id", "rank")),
     // X3f+X24 the tuning curve on the composed SQ index: recall vs
     // nprobe against the index's OWN un-pruned SDC truth (pruning
     // cost only — quantization loss is x142's axis); x99's one-plan
     // crk-prefix discipline, over-provisioned point must read 1.0
     "x149_sq_probe_curve" -> ((s, dir) =>
-      Similarity.sqProbedRecallCurve(Tables.read(s, dir, "embeddings"),
-        Seq(0L, 1L, 2L), 5, RecallCurveProbes)
+      Similarity.recall(Tables.read(s, dir, "embeddings"),
+        Ann(Coarse.Probe(RecallCurveProbes: _*), Code.Sq), Seq(0L, 1L, 2L), 5)
         .orderBy("nprobe", "q_id")),
     // X3: exact squared-euclidean top-k — the L2 ground truth the ADC
     // audit needs (and the metric the reference's range queries use)
     "x116_l2_topk" -> ((s, dir) =>
-      Similarity.topKBruteL2(Tables.read(s, dir, "embeddings"), Seq(0L, 1L, 2L), 5)
+      Similarity.topK(Tables.read(s, dir, "embeddings"),
+        Ann(Coarse.All, Code.L2), Seq(0L, 1L, 2L), 5)
         .orderBy("q_id", "rank")),
     // X3b PQ recall audit: what the 32× compression costs, per query
     "x117_pq_recall" -> ((s, dir) =>
-      Similarity.pqRecall(Tables.read(s, dir, "embeddings"), Seq(0L, 1L, 2L), 5)
+      Similarity.recall(Tables.read(s, dir, "embeddings"),
+        Ann(Coarse.All, Code.Pq()), Seq(0L, 1L, 2L), 5)
         .orderBy("q_id")),
     // X3b IVFADC: coarse cell prune × ADC over codes — the composed
     // deployment (partition prune × 32× compression at 100 TB)
     "x118_ivf_adc_topk" -> ((s, dir) =>
-      Similarity.topKIvfPqAdc(Tables.read(s, dir, "embeddings"), Seq(0L, 1L, 2L), 5)
+      Similarity.topK(Tables.read(s, dir, "embeddings"),
+        Ann(Coarse.Cell, Code.Pq()), Seq(0L, 1L, 2L), 5)
         .orderBy("q_id", "rank")),
     // X3b multi-probe IVFADC: same knob on the PQ composition — ADC
     // over each query's 2 nearest coarse cells' code rows, original
     // floats still never read
     "x148_ivfadc_probed" -> ((s, dir) =>
-      Similarity.topKIvfPqAdcProbed(Tables.read(s, dir, "embeddings"),
-        Seq(0L, 1L, 2L), 5, nprobe = 2)
+      Similarity.topK(Tables.read(s, dir, "embeddings"),
+        Ann(Coarse.Probe(2), Code.Pq()), Seq(0L, 1L, 2L), 5)
         .orderBy("q_id", "rank")),
     // X3c+X24 the same tuning curve on IVFADC (truth = un-pruned ADC;
     // PQ quantization loss stays x117's separate axis)
     "x150_adc_probe_curve" -> ((s, dir) =>
-      Similarity.adcProbedRecallCurve(Tables.read(s, dir, "embeddings"),
-        Seq(0L, 1L, 2L), 5, RecallCurveProbes)
+      Similarity.recall(Tables.read(s, dir, "embeddings"),
+        Ann(Coarse.Probe(RecallCurveProbes: _*), Code.Pq()), Seq(0L, 1L, 2L), 5)
         .orderBy("nprobe", "q_id")),
     // X3f build-once/search-many: the IVF-SQ index persisted to
     // tables (centroids, params, cell-partitioned codes), then
@@ -1186,24 +1198,24 @@ object SparkEntry {
     // 2 nearest centroid cells by exact int64 distance instead of
     // only its own label cell
     "x95_ivf_multiprobe" -> ((s, dir) =>
-      Similarity.topKIvfProbe(Tables.read(s, dir, "embeddings"),
-        Seq(0L, 1L, 2L), 5, nprobe = 2)
+      Similarity.topK(Tables.read(s, dir, "embeddings"),
+        Ann(Coarse.Probe(2), Code.Cosine), Seq(0L, 1L, 2L), 5)
         .orderBy("q_id", "rank")),
     // X24+X3 the production IVF tuning loop: recall@5 as a function of
     // nprobe (brute truth computed once, shared across curve points);
     // the last probe count exceeds any SF's cell count, so those rows
     // must read recall = 1.0 — the x95 ≡-brute property as data
     "x99_ann_recall_curve" -> ((s, dir) =>
-      Similarity.annRecallCurve(Tables.read(s, dir, "embeddings"),
-        Seq(0L, 1L, 2L), 5, RecallCurveProbes)
+      Similarity.recall(Tables.read(s, dir, "embeddings"),
+        Ann(Coarse.Probe(RecallCurveProbes: _*), Code.Cosine), Seq(0L, 1L, 2L), 5)
         .orderBy("nprobe", "q_id")),
     // X3e Matryoshka-style truncated-dimension recall curve: how much
     // search quality the first-d-dims index gives up vs full dimension
     // — ONE corpus scan, dims exploded row-side; the full-dim point
     // anchors at recall 1.0
     "x137_trunc_dim_recall" -> ((s, dir) =>
-      Similarity.truncatedDimRecall(Tables.read(s, dir, "embeddings"),
-        Seq(0L, 1L, 2L), 5, TruncDims)
+      Similarity.recall(Tables.read(s, dir, "embeddings"),
+        Ann(Coarse.All, Code.Truncated(TruncDims: _*)), Seq(0L, 1L, 2L), 5)
         .orderBy("dims", "q_id")),
     // X28+X3 composition: relabel the corpus with the Lloyd step's
     // assignment, then IVF-search the LEARNED cells — proves the
@@ -1214,7 +1226,7 @@ object SparkEntry {
         Similarity.kmeansIter(emb)
           .select(col("vec_id"), col("new_label").cast("int").as("label")),
         "vec_id")
-      Similarity.topKIvf(relabeled, Seq(0L, 1L, 2L), 5)
+      Similarity.topK(relabeled, Ann(Coarse.Cell, Code.Cosine), Seq(0L, 1L, 2L), 5)
         .orderBy("q_id", "rank")
     }),
     // X28 one deterministic Lloyd iteration: floor-integer-mean

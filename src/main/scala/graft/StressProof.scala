@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, Similarity}
+import graft.operators.Similarity.{Ann, Coarse, Code}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -256,10 +257,10 @@ object StressProof {
     val queries = (0L until 200L by 10L).toSeq // 20 query ids
     val k = 10
     val (brute, tBrute) = timed(
-      Similarity.topKBrute(emb, queries, k)
+      Similarity.topK(emb, Ann(Coarse.All, Code.Cosine), queries, k)
         .select("q_id", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     val (ivfRes, tIvf) = timed(
-      Similarity.topKIvf(emb, queries, k)
+      Similarity.topK(emb, Ann(Coarse.Cell, Code.Cosine), queries, k)
         .select("q_id", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     emb.unpersist()
     val recall = (brute & ivfRes).size.toDouble / brute.size
@@ -330,12 +331,12 @@ object StressProof {
     require(nCw <= 64L * m, s"codewords must stay <= cells*m, got $nCw")
     val lbl = emb.select(col("vec_id"), col("label"))
     val qlbl = lbl.select(col("vec_id").as("q_id"), col("label").as("q_label"))
-    val adcDf = Similarity.topKPqAdc(emb, queries, k, m, dim).cache()
+    val adcDf = Similarity.topK(emb, Ann(Coarse.All, Code.Pq(m, dim)), queries, k).cache()
     val (adc, tAdc) = timed(
       adcDf.select("q_id", "vec_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet)
     val (ivfadc, tIvfAdc) = timed(
-      Similarity.topKIvfPqAdc(emb, queries, k, m, dim)
+      Similarity.topK(emb, Ann(Coarse.Cell, Code.Pq(m, dim)), queries, k)
         .select("q_id", "vec_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet)
     val crossCell = adcDf

@@ -28,10 +28,6 @@ final case class Agg(
 
   /** Sample mean; NaN on empty. */
   def mean: Double = if (count == 0) Double.NaN else sum / count
-
-  /** Time-weighted mean; NaN when no covered time. */
-  def integralMean: Double =
-    if (activeTime == 0) Double.NaN else integral / activeTime.toDouble
 }
 
 object Agg {

@@ -41,8 +41,8 @@ object CacheScope {
     * session's CacheManager keeps the logical-plan registration — a
     * later query building the same subtree is substituted with the
     * cached relation and re-materializes it on its next action
-    * (correctness-neutral; plan-SHAPE assertions should run before
-    * any matching persist registers, see LayoutSpec's ordering note).
+    * (correctness-neutral; plan-SHAPE assertions should start from a
+    * cleared cache, as LayoutSpec's x168/x169 plan test does).
     */
   def scoped[A](s: SparkSession)(body: => A): A = {
     val before = s.sparkContext.getPersistentRDDs.keySet

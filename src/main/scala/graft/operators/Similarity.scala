@@ -15,11 +15,9 @@ import org.apache.spark.sql.types._
   * floating-point reduction appears anywhere, so Spark and DuckDB agree
   * bitwise. Quantization error (~5e-5/element) is irrelevant for ANN.
   *
-  * Scale posture: [[topKBrute]] broadcasts the (small) query set and scans
-  * the corpus once — the right baseline at any corpus size when |queries|
-  * is small. [[topKIvf]] additionally prunes the scan to the query's
-  * partition cell (here the `label` column standing in for a learned IVF
-  * centroid assignment), the standard 10–100× scan reduction.
+  * Every ANN search runs through one pipeline — an [[Ann]] description
+  * of coarse candidate filter and code, served by [[topK]] and audited
+  * by [[recall]]; see the pipeline section below.
   */
 object Similarity {
 
@@ -41,20 +39,6 @@ object Similarity {
     // would produce inf/NaN — define cosine(0, ·) = 0 in both engines
     when(col("n2") === 0 || col("qn2") === 0, lit(0.0)).otherwise(
       dot.cast("double") / (sqrt(col("n2").cast("double")) * sqrt(col("qn2").cast("double"))))
-  }
-
-  /** Brute-force top-k cosine neighbors for each query id. */
-  def topKBrute(emb: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
-    val corpus = quantized(emb)
-    val q = corpus.filter(col("vec_id").isin(queryIds: _*)).select(
-      col("vec_id").as("q_id"), col("vq").as("qv"), col("n2").as("qn2"))
-    val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("vec_id"))
-    corpus.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cosine", cosExpr)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "vec_id", "rank", "cosine")
   }
 
   /** Embedding-cosine near-dup pairs ≥ `threshold`, blocked by the IVF
@@ -142,130 +126,25 @@ object Similarity {
         coalesce(col("n_hits"), lit(0L)).as("n_hits"), col("first_hit"))
   }
 
-  /** Sign-LSH bucketed ANN (SURVEY §2.10 X3s) — the LSH-bucketed
-    * scale path NEXT TO the IVF family: no clustering step, no
-    * centroid table, just `tables × bitsPerTable` sign bits per
-    * vector and an equi-join on the per-table code. The hyperplanes
-    * are DATA-DERIVED and deterministic — hyperplane `i` is the
-    * difference of the (2i)-th and (2i+1)-th lowest-id corpus vectors
-    * (a zero-mean-ish direction, the "random projection without an
-    * RNG" trick: reproducible across runs and engines, no seed to
-    * checkpoint). Each vector's bit `i` is `sign(⟨vq, h_i⟩) ≥ 0` in
-    * EXACT int64 arithmetic (the ×10⁴ quantized domain — no float
-    * reduction anywhere, so Spark and DuckDB agree on every bit);
-    * bits group into `tables` codes of `bitsPerTable` bits, and a
-    * corpus vector is a candidate iff it shares ANY table's code with
-    * the query (the classic OR-of-ANDs banding amplification, the
-    * same shape as [[graft.operators.Dedup]]'s MinHash bands).
-    * Candidates are re-ranked by exact quantized cosine.
-    *
-    * Scale posture: the hyperplane table is 2·B tiny rows —
-    * broadcast; bit computation is a projection of the ONE corpus
-    * scan (B narrow rows per vector, folded to `tables` codes by a
-    * partial-agg groupBy); the candidate join is an equi-join on
-    * (table, code) against the |queries|·tables-row broadcast query
-    * fingerprint — candidates ∝ bucket collisions, never n². The
-    * per-vector code table is what a 100 TB deployment PERSISTS
-    * (8 bytes × tables per vector); here it is persisted for the
-    * duration of the query so the query-side fingerprint lookup does
-    * not recompute the corpus scan.
-    *
-    * Parameter scaling law (unlike IVF, where cells grow with the
-    * corpus): for FIXED params the candidate FRACTION is
-    * corpus-size-independent (≈ 1 − (1 − occ·2^-b)^T for b bits and
-    * T tables, occ = bucket-occupancy skew) — so holding absolute
-    * candidate counts at 100 TB means growing `bitsPerTable` with
-    * log₂(corpus) and then `tables` until [[signLshRecall]] clears
-    * the recall bar. The audit exists precisely because these two
-    * knobs must be TUNED ON DATA: on the synthetic fixture corpus,
-    * 16×4 measures recall ≈ 0.9 at ~64% candidates while 32×8
-    * measures ≈ 0.6 at ~13% — the trade is real and the recall row
-    * makes it visible instead of assumed.
+  /** Per-cell truncated-integer-mean centroids of a [[quantized]]
+    * corpus: `(c_label, cvec, cn2)` — k rows, broadcast-sized. Shared
+    * by [[kmeansIter]] and [[probedCells]].
     */
-  def topKSignLsh(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                  tables: Int = 4, bitsPerTable: Int = 4): DataFrame = {
-    require(tables > 0 && bitsPerTable > 0 && bitsPerTable <= 62,
-      s"need tables > 0 and bitsPerTable in [1,62], got $tables/$bitsPerTable")
-    val nBits = tables * bitsPerTable
-    val corpus = quantized(emb)
-    // anchor pairing needs a total order on ≤2B rows — the one
-    // single-partition window in this operator, bounded by parameter
-    // choice (like the PQ codebook build), never by corpus size
-    val anchors = corpus.orderBy("vec_id").limit(2 * nBits)
-      .select(col("vec_id"), col("vq"))
-      .withColumn("idx",
-        row_number().over(Window.orderBy("vec_id")) - 1)
-    val hyper = anchors.withColumn("hid", expr("idx div 2"))
-      .groupBy("hid")
-      .agg(max(when(col("idx") % 2 === 0, col("vq"))).as("va"),
-        max(when(col("idx") % 2 === 1, col("vq"))).as("vb"))
-      // a corpus smaller than 2B anchors yields a trailing unpaired
-      // anchor — drop the incomplete pair (the oracle's pair join
-      // drops it identically)
-      .filter(col("va").isNotNull && col("vb").isNotNull)
-      .withColumn("hvec", zip_with(col("va"), col("vb"), (x, y) => x - y))
-      .select("hid", "hvec")
-    val codes = corpus.select("vec_id", "vq").crossJoin(broadcast(hyper))
-      .withColumn("bit",
-        (VecOps.dot(col("vq"), col("hvec")) >= 0L).cast("long"))
-      .withColumn("t", expr(s"hid div $bitsPerTable"))
-      .groupBy("vec_id", "t")
-      .agg(sum(expr(s"bit * shiftleft(1L, hid % $bitsPerTable)"))
-        .as("code"))
-      .persist()
-    val qCodes = codes.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("q_id"), col("t"), col("code"))
-    val candIds = codes.join(broadcast(qCodes), Seq("t", "code"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select("q_id", "vec_id").distinct()
-    val qv = corpus.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("q_id"), col("vq").as("qv"),
-        col("n2").as("qn2"))
-    val w = Window.partitionBy("q_id").orderBy(col("cosine").desc,
-      col("vec_id"))
-    candIds.join(corpus, "vec_id").join(broadcast(qv), "q_id")
-      .withColumn("cosine", cosExpr)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "vec_id", "rank", "cosine")
-  }
+  private def centroids(q: DataFrame): DataFrame =
+    q.select(col("label"), posexplode(col("vq")).as(Seq("dim", "v")))
+      .groupBy("label", "dim")
+      .agg(sum("v").as("s"), count(lit(1)).as("cnt"))
+      .withColumn("c", expr("s div cnt"))
+      .groupBy("label")
+      .agg(expr("transform(sort_array(collect_list(struct(dim, c))), x -> x.c)")
+        .as("cvec"))
+      .select(col("label").as("c_label"), col("cvec"),
+        VecOps.normSq(col("cvec")).as("cn2"))
 
-  /** Recall@k audit of [[topKSignLsh]] against the brute-force ground
-    * truth — the [[annRecall]] discipline applied to the sign-LSH
-    * path, so the banding parameters are TUNED ON DATA, not assumed:
-    * more tables → higher recall and more candidates; the audit is
-    * the number that justifies the trade.
-    */
-  def signLshRecall(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                    tables: Int = 4, bitsPerTable: Int = 4): DataFrame =
-    recallAgainstBrute(
-      topKBrute(emb, queryIds, k).select("q_id", "vec_id"),
-      topKSignLsh(emb, queryIds, k, tables, bitsPerTable)
-        .select("q_id", "vec_id"),
-      Seq("q_id"))
-      .select("q_id", "n_brute", "n_hit", "recall")
-
-  /** IVF-cell-restricted top-k: only candidates in the query's `label`
-    * cell are scanned (partition-pruned at 100 TB when the corpus is
-    * written partitioned by cell).
-    */
-  def topKIvf(emb: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
-    val corpus = quantized(emb)
-    val q = corpus.filter(col("vec_id").isin(queryIds: _*)).select(
-      col("vec_id").as("q_id"), col("label").as("q_label"),
-      col("vq").as("qv"), col("n2").as("qn2"))
-    val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("vec_id"))
-    corpus.join(broadcast(q), col("label") === col("q_label"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cosine", cosExpr)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "vec_id", "rank", "cosine")
-  }
 
   /** One deterministic k-means (Lloyd) iteration (SURVEY §2.10 X28) —
     * the centroid-refinement primitive behind the IVF cell assignment
-    * every other embedding operator here consumes ([[topKIvf]],
+    * every other embedding operator here consumes ([[Coarse.Cell]],
     * [[semanticDedup]], [[embedDecontaminate]] all take the cell
     * column as given; this is the operator that LEARNS it). Computes
     * each current cell's centroid as the element-wise FLOOR integer
@@ -286,21 +165,6 @@ object Similarity {
     * driver loop. Iterating = calling this again on the relabeled
     * output.
     */
-  /** Per-cell truncated-integer-mean centroids of a [[quantized]]
-    * corpus: `(c_label, cvec, cn2)` — k rows, broadcast-sized. Shared
-    * by [[kmeansIter]] and [[topKIvfProbe]].
-    */
-  private def centroids(q: DataFrame): DataFrame =
-    q.select(col("label"), posexplode(col("vq")).as(Seq("dim", "v")))
-      .groupBy("label", "dim")
-      .agg(sum("v").as("s"), count(lit(1)).as("cnt"))
-      .withColumn("c", expr("s div cnt"))
-      .groupBy("label")
-      .agg(expr("transform(sort_array(collect_list(struct(dim, c))), x -> x.c)")
-        .as("cvec"))
-      .select(col("label").as("c_label"), col("cvec"),
-        VecOps.normSq(col("cvec")).as("cn2"))
-
   def kmeansIter(emb: DataFrame): DataFrame = {
     val q = quantized(emb)
     val cent = centroids(q)
@@ -411,97 +275,6 @@ object Similarity {
     (cur.select("vec_id", "label"), it)
   }
 
-  /** Multi-probe IVF top-k (SURVEY §2.10 X3's recall/cost knob): each
-    * query searches its `nprobe` NEAREST centroid cells (by the same
-    * exact int64 squared distance as [[kmeansIter]], ties to the lower
-    * cell label) instead of only its own cell — the standard remedy
-    * when a true neighbor sits just across a cell boundary.
-    * `nprobe = 1` probes the query's closest cell (which may differ
-    * from its stored label if the labels aren't converged);
-    * `nprobe = |cells|` degenerates to brute force.
-    *
-    * Scale shape: the centroid table is k rows; the query→cell
-    * ranking runs on a |queries|·k frame (broadcast-sized, windowed
-    * per query over k candidate cells — tiny by construction); the
-    * corpus then joins the probed (query, cell) pairs on the cell
-    * equi-join, scanning `nprobe/|cells|` of the corpus per query.
-    */
-  def topKIvfProbe(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                   nprobe: Int = 2): DataFrame =
-    topKProbedMulti(emb, queryIds, k, Seq(nprobe)).drop("nprobe")
-
-  /** The probed search over a WHOLE probe-count dimension in one plan:
-    * for every `(nprobe ∈ nprobes, query)`, the top-k over the query's
-    * `nprobe` nearest centroid cells. The query→cell ranking (`crk`)
-    * is computed once and each probe count takes its prefix via the
-    * tiny probes-table cross join, so adding curve points costs probed
-    * candidates, never extra corpus scans or centroid builds —
-    * [[annRecallCurve]] needs exactly this (a union of per-point
-    * searches would replan the shared work per point: Spark does not
-    * share subplans across union branches). [[topKIvfProbe]] is the
-    * single-point specialization.
-    */
-  private def topKProbedMulti(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                              nprobes: Seq[Int]): DataFrame = {
-    require(k > 0 && nprobes.nonEmpty && nprobes.forall(_ > 0),
-      s"k and nprobes must be positive, got k=$k nprobes=$nprobes")
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val probes = nprobes.map(_.toLong).toDF("nprobe")
-    val corpus = quantized(emb)
-    val cent = centroids(corpus)
-    val qcells = corpus.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("q_id"), col("vq").as("qv"),
-        col("n2").as("qn2"))
-      .crossJoin(broadcast(cent))
-      .withColumn("cd2",
-        col("qn2") - lit(2L) * VecOps.dot(col("qv"), col("cvec")) + col("cn2"))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("cd2"), col("c_label"))))
-      .crossJoin(broadcast(probes))
-      .filter(col("crk") <= col("nprobe"))
-      .select(col("nprobe"), col("q_id"), col("qv"), col("qn2"),
-        col("c_label"))
-    val w = Window.partitionBy("nprobe", "q_id")
-      .orderBy(col("cosine").desc, col("vec_id"))
-    corpus.join(broadcast(qcells), col("label") === col("c_label"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cosine", cosExpr)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("nprobe", "q_id", "vec_id", "rank", "cosine")
-  }
-
-  /** ANN quality audit (SURVEY §2.10 X24): per-query recall@k of the
-    * IVF-pruned search against the brute-force ground truth — the
-    * metric every production ANN deployment tracks before trusting the
-    * pruned path. `n_hit` counts brute-force neighbors the IVF search
-    * also returned; `recall = n_hit / n_brute` is the ONE double
-    * division (components int64-exact, so the output hash-matches any
-    * engine).
-    *
-    * Scale shape: both inputs are top-k result sets — k·|queries| rows
-    * — so the audit join is broadcast-sized regardless of corpus size;
-    * the corpus-scan cost is the two searches themselves, each already
-    * scale-shaped (broadcast query set; IVF additionally cell-pruned).
-    */
-  def annRecall(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                nprobe: Option[Int] = None): DataFrame = {
-    val approx = nprobe.fold(topKIvf(emb, queryIds, k))(p =>
-      topKIvfProbe(emb, queryIds, k, p))
-    recallAgainstBrute(topKBrute(emb, queryIds, k).select("q_id", "vec_id"),
-      approx.select("q_id", "vec_id"), Seq("q_id"))
-      .select("q_id", "n_brute", "n_hit", "recall")
-  }
-
-  /** Per-key recall@k of an approximate result set against the
-    * brute-force ground truth — THE audit aggregation, keyed by
-    * `keys` (q_id alone for [[annRecall]]; (nprobe, q_id) for
-    * [[annRecallCurve]]) so the hit-count/coalesce/recall spelling
-    * exists exactly once. Both inputs are top-k result sets
-    * (k·|queries| rows, times |probes| for the curve), so the join is
-    * broadcast-sized regardless of corpus size.
-    */
   /** Scalar (8-bit) quantization codes — the SQ leg of the index-
     * compression family next to PQ (x114): each dimension is affinely
     * mapped to 0..255 by its corpus-wide [min, max] (one code byte per
@@ -570,290 +343,11 @@ object Similarity {
       .drop("dmins", "dmaxs")
 
   /** `(vec_id, label, cv, cn2)` — corpus with the SQ code vector and
-    * its exact squared norm; shared by [[sqCodes]] and [[topKSq]].
+    * its exact squared norm; shared by [[sqCodes]] and the [[Code.Sq]] search.
     */
   private def sqCoded(emb: DataFrame): DataFrame = {
     val q = quantized(emb)
     sqCodeWith(q, sqParams(q)).select("vec_id", "label", "cv", "cn2")
-  }
-
-  /** SQ top-k by SYMMETRIC distance computation (SDC — both sides
-    * quantized, the FAISS `IndexScalarQuantizer` search mode): exact
-    * int64 L2 over the code vectors, rank asc with the vec_id
-    * tie-break ([[topKBruteL2]] shape — ties are the norm at 8-bit
-    * resolution, so the deterministic break is load-bearing).
-    */
-  def topKSq(emb: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
-    val corpus = sqCoded(emb)
-    val q = corpus.filter(col("vec_id").isin(queryIds: _*)).select(
-      col("vec_id").as("q_id"), col("cv").as("qv"), col("cn2").as("qn2"))
-    val w = Window.partitionBy("q_id").orderBy(col("d2").asc, col("vec_id"))
-    corpus.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("d2",
-        col("cn2") - lit(2L) * VecOps.dot(col("cv"), col("qv")) + col("qn2"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "vec_id", "rank", "d2")
-  }
-
-  /** IVF-SQ composed search (the FAISS `IndexIVFScalarQuantizer`
-    * deployment: coarse cell prune × SDC over the codes) — the SQ
-    * sibling of the x118 IVFADC composition: the scan is restricted
-    * to the query's cell AND touches only code vectors, never
-    * original floats. Same SDC distance, rank and tie-break as
-    * [[topKSq]]; at 100 TB a partition-pruned scan of an 8×-smaller
-    * representation.
-    */
-  def topKIvfSq(emb: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
-    val corpus = sqCoded(emb)
-    val q = corpus.filter(col("vec_id").isin(queryIds: _*)).select(
-      col("vec_id").as("q_id"), col("label").as("q_label"),
-      col("cv").as("qv"), col("cn2").as("qn2"))
-    val w = Window.partitionBy("q_id").orderBy(col("d2").asc, col("vec_id"))
-    corpus.join(broadcast(q), col("label") === col("q_label"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("d2",
-        col("cn2") - lit(2L) * VecOps.dot(col("cv"), col("qv")) + col("qn2"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "vec_id", "rank", "d2")
-  }
-
-  /** The ONE definition of the coarse-probe rule for the composed
-    * searches ([[topKIvfSqProbed]], [[topKIvfPqAdcProbed]] and their
-    * curves, all via the *ProbedMulti cores): each query's nearest
-    * coarse cells ranked by the same exact int64 squared distance
-    * (ties to the lower cell label) as [[topKProbedMulti]]'s `crk`,
-    * so cell selection cannot drift from the plain IVF multi-probe's.
-    * Broadcast-sized by construction: |queries| × k centroid
-    * candidates in, ≤ |queries| × Σnprobes pairs out, computed over
-    * a WHOLE probe-count dimension in one plan —
-    * `(nprobe, q_id, c_label)`: the query→cell ranking (`crk`) is
-    * computed once and each probe count takes its prefix via the tiny
-    * probes-table cross join, exactly [[topKProbedMulti]]'s trick, so
-    * the composed recall curves cost probed candidates, never extra
-    * centroid builds.
-    */
-  private def probedCellsMulti(emb: DataFrame, queryIds: Seq[Long],
-                               nprobes: Seq[Int]): DataFrame = {
-    val corpus = quantized(emb)
-    probedCellsCore(
-      corpus.filter(col("vec_id").isin(queryIds: _*))
-        .select(col("vec_id").as("q_id"), col("vq").as("pv"),
-          col("n2").as("pn2")),
-      centroids(corpus), nprobes)
-  }
-
-  /** The probe rule against an EXPLICIT centroid table — the piece
-    * [[probedCellsMulti]] (inline: centroids derived from the corpus)
-    * and the index searchers ([[searchIvfSq]], [[searchIvfPqAdc]]:
-    * centroids read from the persisted index) share, so the cell
-    * ranking is the same computation whichever side the centroids
-    * came from.
-    */
-  private def probedCellsCore(q: DataFrame, cent: DataFrame,
-                              nprobes: Seq[Int]): DataFrame = {
-    require(nprobes.nonEmpty && nprobes.forall(_ > 0),
-      s"nprobes must be non-empty positive, got $nprobes")
-    require(nprobes.distinct == nprobes,
-      s"duplicate nprobe values would duplicate rows: $nprobes")
-    val spark = q.sparkSession
-    import spark.implicits._
-    val probes = nprobes.map(_.toLong).toDF("nprobe")
-    q.crossJoin(broadcast(cent))
-      .withColumn("cd2",
-        col("pn2") - lit(2L) * VecOps.dot(col("pv"), col("cvec")) + col("cn2"))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("cd2"), col("c_label"))))
-      .crossJoin(broadcast(probes))
-      .filter(col("crk") <= col("nprobe"))
-      .select("nprobe", "q_id", "c_label")
-  }
-
-  /** Multi-probe IVF-SQ (the recall/cost knob on the composed
-    * `IndexIVFScalarQuantizer` deployment): SDC over the code vectors
-    * restricted to each query's `nprobe` nearest coarse cells —
-    * [[topKIvfSq]] is stuck at single-cell recall; this is THE axis a
-    * FAISS-style deployment tunes on exactly this index. Cell ranking
-    * happens in the ORIGINAL quantized space ([[probedCellsMulti]] — the
-    * coarse quantizer sees raw vectors, as FAISS's does), scoring in
-    * the code space ([[topKSq]]'s SDC distance, rank and tie-break).
-    *
-    * `nprobe ≥ |cells|` degenerates to the un-pruned [[topKSq]]
-    * exactly (the reachable-ceiling anchor), and the probed cell sets
-    * are PREFIXES of one ranking, so recall against any fixed truth is
-    * non-decreasing in `nprobe` by construction — both pinned in
-    * ExtensionsSpec. Scale shape: one centroid build + one
-    * broadcast-sized probe table; the corpus scan joins codes to the
-    * probed (query, cell) pairs on the cell equi-join, touching
-    * `nprobe/|cells|` of the 8×-compressed representation per query
-    * and never the original floats.
-    */
-  def topKIvfSqProbed(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                      nprobe: Int = 2): DataFrame =
-    sqProbedMulti(emb, queryIds, k, Seq(nprobe)).drop("nprobe")
-
-  /** The probed SDC search over the whole probe dimension — shared by
-    * [[topKIvfSqProbed]] (single point) and [[sqProbedRecallCurve]],
-    * so the search the curve audits IS the search a deployment runs.
-    */
-  private def sqProbedMulti(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                            nprobes: Seq[Int]): DataFrame = {
-    val corpus = sqCoded(emb)
-    val q = corpus.filter(col("vec_id").isin(queryIds: _*)).select(
-      col("vec_id").as("q_id"), col("cv").as("qv"), col("cn2").as("qn2"))
-    sdcProbedRank(corpus,
-      probedCellsMulti(emb, queryIds, nprobes).join(q, "q_id"), k)
-  }
-
-  /** The probed SDC scoring/ranking tail over a coded corpus
-    * (`(vec_id, label, cv, cn2)` rows) and a probe table
-    * (`(nprobe, q_id, c_label, qv, qn2)` rows) — ONE spelling shared
-    * by the inline [[sqProbedMulti]] and the index-backed
-    * [[searchIvfSq]], so the deployed search-from-tables path scores
-    * exactly like the audited inline path.
-    */
-  private def sdcProbedRank(codes: DataFrame, probes: DataFrame,
-                            k: Int): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    val w = Window.partitionBy("nprobe", "q_id")
-      .orderBy(col("d2").asc, col("vec_id"))
-    codes.join(broadcast(probes), col("label") === col("c_label"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("d2",
-        col("cn2") - lit(2L) * VecOps.dot(col("cv"), col("qv")) + col("qn2"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("nprobe", "q_id", "vec_id", "rank", "d2")
-  }
-
-  /** Recall-vs-nprobe tuning curve for the composed IVF-SQ index —
-    * the [[annRecallCurve]] (x99) discipline on [[topKIvfSqProbed]]:
-    * one row per (nprobe, query), ONE plan (truth once, probed search
-    * once over the whole probe dimension). The truth is the index's
-    * OWN un-pruned SDC search ([[topKSq]]): the curve measures what
-    * the CELL PRUNING costs in the metric the index actually serves —
-    * monotone in nprobe by prefix nesting, reaching exactly 1.0 at
-    * the over-provisioned point (probed ≡ un-pruned, spec-pinned).
-    * The quantization loss itself is the separate x142 audit; keeping
-    * the two axes apart is what makes either number actionable.
-    */
-  def sqProbedRecallCurve(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                          nprobes: Seq[Int]): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val probes = nprobes.map(_.toLong).toDF("nprobe")
-    val truth = topKSq(emb, queryIds, k).select("q_id", "vec_id")
-    recallAgainstBrute(truth.crossJoin(broadcast(probes)),
-      sqProbedMulti(emb, queryIds, k, nprobes)
-        .select("nprobe", "q_id", "vec_id"),
-      Seq("nprobe", "q_id"))
-      .select("q_id", "n_brute", "n_hit", "recall", "nprobe")
-  }
-
-  /** SQ recall audit — recall@k of [[topKSq]] vs the exact L2 truth
-    * ([[topKBruteL2]], x116): what the 8× compression costs before a
-    * deployment trusts the SQ index, the x117 discipline applied to
-    * the scalar quantizer.
-    */
-  def sqRecall(emb: DataFrame, queryIds: Seq[Long], k: Int): DataFrame =
-    recallAgainstBrute(
-      topKBruteL2(emb, queryIds, k).select("q_id", "vec_id"),
-      topKSq(emb, queryIds, k).select("q_id", "vec_id"), Seq("q_id"))
-      .select("q_id", "n_brute", "n_hit", "recall")
-
-  /** Truncated-dimension recall curve (the Matryoshka/MRL deployment
-    * audit, Kusupati et al. 2022): recall@k of brute-force search over
-    * only the FIRST `d` embedding dimensions vs the full-dimension
-    * truth, one row per (dims, query) — what a deployment reads before
-    * serving the cheaper d-dim index. A `dims` equal to the full
-    * dimension searches the identical space, so its rows must read
-    * recall = 1.0 (the x99-style reachable-ceiling anchor).
-    *
-    * ONE corpus scan: the dims axis explodes row-side (|dims| quantize
-    * +norm evaluations per vector — the irreducible work), queries
-    * broadcast per dims via an equi-join, and the per-(dims, query)
-    * top-k is the [[topKBrute]] window. Same exact int64 cosine
-    * discipline; truncation happens BEFORE quantization so each curve
-    * point is exactly the d-dim engine a deployment would run.
-    */
-  def truncatedDimRecall(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                         dims: Seq[Int]): DataFrame = {
-    require(dims.nonEmpty && dims.forall(_ > 0),
-      s"dims must be non-empty positive, got $dims")
-    require(dims.distinct == dims,
-      s"duplicate dims values would duplicate curve rows: $dims")
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val dimsDf = dims.map(_.toLong).toDF("dims")
-    val corpus = emb.crossJoin(broadcast(dimsDf))
-      .select(col("dims"), col("vec_id"),
-        VecOps.quantize(slice(col("embedding"), lit(1),
-          col("dims").cast("int"))).as("vq"))
-      .withColumn("n2", VecOps.normSq(col("vq")))
-    val q = corpus.filter(col("vec_id").isin(queryIds: _*)).select(
-      col("dims").as("qdims"), col("vec_id").as("q_id"),
-      col("vq").as("qv"), col("n2").as("qn2"))
-    val w = Window.partitionBy("dims", "q_id")
-      .orderBy(col("cosine").desc, col("vec_id"))
-    val truncated = corpus.join(broadcast(q), col("dims") === col("qdims"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cosine", cosExpr)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("dims", "q_id", "vec_id")
-    val brute = topKBrute(emb, queryIds, k).select("q_id", "vec_id")
-    recallAgainstBrute(brute.crossJoin(broadcast(dimsDf)), truncated,
-      Seq("dims", "q_id"))
-      .select("q_id", "n_brute", "n_hit", "recall", "dims")
-  }
-
-  private def recallAgainstBrute(brute: DataFrame, approx: DataFrame,
-                                 keys: Seq[String]): DataFrame =
-    brute.join(broadcast(approx.withColumn("hit", lit(1L))),
-        keys :+ "vec_id", "left")
-      .groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("n_brute"),
-        coalesce(sum("hit"), lit(0L)).as("n_hit"))
-      .withColumn("recall",
-        col("n_hit").cast("double") / col("n_brute").cast("double"))
-
-  /** The recall/cost tuning curve a production IVF deployment actually
-    * reads: recall@k of [[topKIvfProbe]] as a function of `nprobe` —
-    * one row per (nprobe, query), in ONE plan: brute-force ground
-    * truth once, the probed search once over the whole probe dimension
-    * ([[topKProbedMulti]]), and the audit join keyed by
-    * (nprobe, q_id, vec_id). An `nprobe` ≥ the cell count degenerates
-    * to brute force (the x95 equivalence), so its rows must read
-    * recall = 1.0 — the property turned into visible data, and the
-    * anchor that says "the curve's ceiling is reachable".
-    *
-    * Monotonicity (recall non-decreasing in nprobe per query) holds by
-    * construction — probing more cells only ADDS candidates, and top-k
-    * over a superset can only improve against the ground truth — and
-    * is pinned in ExtensionsSpec.
-    *
-    * Scale shape: |curve points| is a handful; every per-point search
-    * is the already-scale-shaped probed search (centroid table k rows,
-    * corpus scan pruned to the probed cells), and the audit joins are
-    * k·|queries|-row broadcasts.
-    */
-  def annRecallCurve(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                     nprobes: Seq[Int]): DataFrame = {
-    require(nprobes.nonEmpty && nprobes.forall(_ > 0),
-      s"nprobes must be non-empty positive, got $nprobes")
-    require(nprobes.distinct == nprobes,
-      s"duplicate nprobe values would duplicate curve rows: $nprobes")
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val probes = nprobes.map(_.toLong).toDF("nprobe")
-    val brute = topKBrute(emb, queryIds, k).select("q_id", "vec_id")
-    val probed = topKProbedMulti(emb, queryIds, k, nprobes)
-      .select("nprobe", "q_id", "vec_id")
-    recallAgainstBrute(brute.crossJoin(broadcast(probes)), probed,
-      Seq("nprobe", "q_id"))
-      .select("q_id", "n_brute", "n_hit", "recall", "nprobe")
   }
 
   /** Product quantization (Jégou et al. 2011, "Product Quantization
@@ -957,45 +451,13 @@ object Similarity {
       .withColumn("mean_d2",
         col("total_d2").cast("double") / col("n_vecs").cast("double"))
 
-  /** Asymmetric-distance (ADC) top-k over PQ codes: each query keeps
-    * its FULL-precision subvectors and precomputes a distance table
-    * d²(q_sub, codeword) for all m·k codewords (|Q|·m·k rows,
-    * broadcast); a corpus vector's approximate distance is then the
-    * sum of m table lookups on its codes — the scan never touches the
-    * original vectors, which is the entire point at 100 TB. All
-    * arithmetic int64 ⇒ `adc_d2` is engine-exact.
-    *
-    * Scale shape: the only corpus-sized work is the (sub, code)
-    * equi-join of the code table against the broadcast distance table
-    * (m rows per vector fanning ×|Q|) and one (q_id, vec_id) partial
-    * aggregation; ranking is a per-query window over an
-    * already-reduced n-row frame per query.
-    */
-  def topKPqAdc(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                m: Int = 8, dims: Int = 64): DataFrame = {
-    val (cb, codes) = pqParts(emb, m, dims)
-    val dtable = adcDistTable(emb, queryIds, m, dims, cb, carryLabel = false)
-    adcRank(codes.join(broadcast(dtable), Seq("sub", "code"))
-      .filter(col("vec_id") =!= col("q_id")), k)
-  }
-
-  /** The query-side ADC distance table — ONE definition shared by
-    * [[topKPqAdc]] and [[topKIvfPqAdc]] (with `carryLabel` adding the
-    * query's coarse cell for the IVFADC prune), so the quantization /
-    * distance expression cannot drift between the plain and composed
-    * searches.
-    */
-  private def adcDistTable(emb: DataFrame, queryIds: Seq[Long], m: Int,
-                           dims: Int, cb: DataFrame,
-                           carryLabel: Boolean): DataFrame =
-    adcDistTableFrom(
-      quantized(emb).filter(col("vec_id").isin(queryIds: _*)),
-      m, dims, cb, carryLabel)
-
-  /** The table build against an EXPLICIT quantized query frame — the
-    * piece the inline searches (queries selected out of the corpus)
-    * and the index-backed [[searchIvfPqAdc]] (queries supplied, the
-    * codebook read from the persisted index) share.
+  /** The query-side ADC distance table `(q_id, [q_label,] sub, code,
+    * qd2)`: d²(q_sub, codeword) for all m·k codewords per query — ONE
+    * definition shared by the inline [[Code.Pq]] searches (queries
+    * selected out of the corpus; `carryLabel` adds the query's cell
+    * for [[Coarse.Cell]]) and the index-backed [[searchIvfPqAdc]]
+    * (queries supplied, the codebook read from the persisted index),
+    * so the distance expression cannot drift between them.
     */
   private def adcDistTableFrom(qrows: DataFrame, m: Int, dims: Int,
                                cb: DataFrame,
@@ -1015,151 +477,465 @@ object Similarity {
       .select(keep: _*)
   }
 
-  /** Shared ADC ranking tail: sum the m per-subspace lookups and rank
-    * ascending with the vec_id tie-break. `withNprobe` adds the probe
-    * dimension to the grouping/window for the multi-point searches.
-    */
-  private def adcRank(scored: DataFrame, k: Int,
-                      withNprobe: Boolean = false): DataFrame = {
-    val keys = if (withNprobe) Seq("nprobe", "q_id") else Seq("q_id")
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col("adc_d2").asc, col("vec_id"))
-    scored.groupBy((keys :+ "vec_id").map(col): _*)
-      .agg(sum("qd2").as("adc_d2"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select((keys ++ Seq("vec_id", "rank", "adc_d2")).map(col): _*)
+  // ----- ANN search: coarse candidate filter → scorer → ranker ------
+  //
+  // Every in-memory search is one description, [[Ann]]`(coarse, code)`,
+  // run through one pipeline (the filter-and-refine shape REPOSE and the
+  // interactive top-k work build every variant on):
+  //  1. the COARSE filter pairs each query with its candidate corpus
+  //     rows — all of them, its stored cell, its `nprobe` nearest cells
+  //     ([[probedCellsCore]]), or its sign-LSH bucket collisions;
+  //  2. the CODE fixes the representation and its scorer — cosine or
+  //     exact L2 on the quantized `vq`, SDC on the SQ `cv`, or the ADC
+  //     sum over the PQ distance table ([[scoreAndRank]]);
+  //  3. [[rank]] keeps the per-query top k, keyed additionally by the
+  //     curve axis (`nprobe` or `dims`) when the description has one.
+  // [[topK]] serves a search; [[recall]] audits one against its truth
+  // through [[recallAgainstBrute]]. The persisted-index searchers below
+  // run the same probe rule, scorers and ranker against stored tables.
+  // Every distance is an exact int64 sum (cosine one fixed IEEE shape
+  // over them), so every search hash-matches its DuckDB oracle.
+
+  /** The coarse candidate filter of an [[Ann]] search. */
+  sealed trait Coarse
+  object Coarse {
+    /** Every corpus vector (brute force): the small query set
+      * broadcasts and the corpus is scanned once — the right baseline
+      * at any corpus size when |queries| is small.
+      */
+    case object All extends Coarse
+
+    /** The query's stored IVF cell (`label`, standing in for a learned
+      * centroid assignment — [[kmeansIter]] learns it): the standard
+      * 10–100× scan reduction, a partition prune at 100 TB when the
+      * corpus is written partitioned by cell.
+      */
+    case object Cell extends Coarse
+
+    /** Multi-probe IVF (the recall/cost knob): each query scans its
+      * `nprobe` NEAREST centroid cells ([[probedCellsCore]] — exact
+      * int64 squared distance in the original quantized space, ties to
+      * the lower cell label) instead of only its stored cell, the
+      * remedy when a true neighbor sits across a cell boundary. Several
+      * probe counts form one curve in ONE plan: the cell ranking is
+      * computed once and each count takes its prefix, so recall against
+      * any fixed truth is non-decreasing in `nprobe` by construction,
+      * and `nprobe ≥ |cells|` degenerates to the un-pruned search
+      * exactly (both spec-pinned).
+      */
+    final case class Probe(nprobes: Int*) extends Coarse {
+      require(nprobes.nonEmpty && nprobes.forall(_ > 0),
+        s"nprobes must be non-empty positive, got $nprobes")
+      require(nprobes.distinct == nprobes,
+        s"duplicate nprobe values would duplicate rows: $nprobes")
+    }
+
+    /** Sign-LSH buckets (SURVEY §2.10 X3s) — the clustering-free scale
+      * path next to IVF: `tables × bitsPerTable` sign bits per vector
+      * against DATA-DERIVED hyperplanes (hyperplane `i` is the
+      * difference of the (2i)-th and (2i+1)-th lowest-id corpus vectors
+      * — reproducible, no seed to checkpoint), each bit
+      * `sign(⟨vq, h_i⟩) ≥ 0` in exact int64 arithmetic; a corpus vector
+      * is a candidate iff it shares ANY table's code with the query
+      * (the OR-of-ANDs banding of [[graft.operators.Dedup]]'s MinHash
+      * bands). Candidates ∝ bucket collisions, never n².
+      *
+      * Parameter scaling law (unlike IVF, where cells grow with the
+      * corpus): for FIXED params the candidate FRACTION is
+      * corpus-size-independent (≈ 1 − (1 − occ·2^-b)^T), so holding
+      * absolute candidate counts at 100 TB means growing
+      * `bitsPerTable` with log₂(corpus), then `tables` until
+      * [[recall]] clears the bar. On the synthetic fixture 16×4
+      * measures recall ≈ 0.9 at ~64% candidates, 32×8 ≈ 0.6 at ~13% —
+      * the knobs must be TUNED ON DATA.
+      */
+    final case class SignLsh(tables: Int = 4, bitsPerTable: Int = 4)
+        extends Coarse {
+      require(tables > 0 && bitsPerTable > 0 && bitsPerTable <= 62,
+        s"need tables > 0 and bitsPerTable in [1,62], got $tables/$bitsPerTable")
+    }
   }
 
-  /** IVFADC — the composed deployment (Jégou et al. 2011 §IV; the
-    * classic large-scale ANN layout): coarse IVF cell pruning THEN
-    * asymmetric-distance ranking over PQ codes, so the scan touches
-    * only the query's cell AND only its codes. At 100 TB the code
-    * table is written partitioned by cell, making the cell filter a
-    * partition prune on an already-32×-compressed table — the two
-    * reductions compose multiplicatively.
+  /** The code an [[Ann]] search scores: it fixes the representation
+    * the scan touches and the distance ranked on.
+    */
+  sealed trait Code
+  object Code {
+    /** Cosine on the quantized `vq`, ranked descending. */
+    case object Cosine extends Code
+
+    /** Exact squared euclidean on `vq`, ranked ascending — the ground
+      * truth SQ and PQ approximate (both quantize L2 space, so auditing
+      * them against cosine would conflate metric change with
+      * quantization loss).
+      */
+    case object L2 extends Code
+
+    /** Symmetric distance (SDC, the FAISS `IndexScalarQuantizer`
+      * search): both sides SQ-coded ([[sqCodes]]), exact int64 L2 over
+      * the code vectors `cv` — the scan touches an 8×-smaller
+      * representation and never the original floats. Ties are the norm
+      * at 8-bit resolution, so the vec_id tie-break is load-bearing.
+      */
+    case object Sq extends Code
+
+    /** Asymmetric distance (ADC, Jégou et al. 2011) over `m`-subspace
+      * PQ codes ([[pqCodes]]): each query keeps its full-precision
+      * subvectors and a |Q|·m·k-row broadcast distance table
+      * ([[adcDistTableFrom]]); a corpus vector's distance is the sum of
+      * its m table lookups — the scan touches only the 32×-compressed
+      * codes, and with a cell filter this is IVFADC, the two reductions
+      * composing multiplicatively.
+      */
+    final case class Pq(m: Int = 8, dims: Int = 64) extends Code
+
+    /** Cosine over only the FIRST `d` embedding dimensions, one curve
+      * point per `d` (the Matryoshka/MRL deployment audit, Kusupati et
+      * al. 2022): truncation happens BEFORE quantization so each point
+      * is exactly the d-dim engine a deployment would run, and the dims
+      * axis explodes row-side over ONE corpus scan.
+      */
+    final case class Truncated(dims: Int*) extends Code {
+      require(dims.nonEmpty && dims.forall(_ > 0),
+        s"dims must be non-empty positive, got $dims")
+      require(dims.distinct == dims,
+        s"duplicate dims values would duplicate curve rows: $dims")
+    }
+  }
+
+  /** One ANN search: a coarse filter and a code. Only the combinations
+    * a deployment runs are accepted — any code over all vectors, the
+    * cell filters over cosine, SQ and PQ, sign-LSH over cosine.
+    */
+  final case class Ann(coarse: Coarse, code: Code) {
+    require((coarse, code) match {
+      case (Coarse.All, _) => true
+      case (Coarse.Cell | Coarse.Probe(_*),
+            Code.Cosine | Code.Sq | Code.Pq(_, _)) => true
+      case (Coarse.SignLsh(_, _), Code.Cosine) => true
+      case _ => false
+    }, s"no ANN search runs $code over $coarse candidates")
+
+    /** The curve axis — one result set per probe count or per prefix
+      * dimension — as (key column, points).
+      */
+    private[operators] def curve: Option[(String, Seq[Int])] =
+      (coarse, code) match {
+        case (Coarse.Probe(ps @ _*), _) => Some("nprobe" -> ps)
+        case (_, Code.Truncated(ds @ _*)) => Some("dims" -> ds)
+        case _ => None
+      }
+  }
+
+  /** Top-k neighbors of each query id under `ann`:
+    * `(q_id, vec_id, rank, score)`, the score column named by the code
+    * (`cosine`, `d2`, or `adc_d2`). A corpus row whose id is the
+    * query's is never its own neighbor. One search, so a [[Coarse.Probe]]
+    * takes exactly one probe count; curves are [[recall]]'s.
     *
-    * Same plan as [[topKPqAdc]] plus one vec_id equi-join to recover
-    * each code row's cell and the `cell == q_cell` filter pushed into
-    * the broadcast-join output.
+    * A [[Code.Pq]] or [[Coarse.SignLsh]] search (and its [[recall]])
+    * persists an intermediate its plan reads twice — the PQ subspace
+    * fan, the sign-LSH code table; whoever runs the result releases it
+    * (the [[CacheScope]] release contract).
     */
-  def topKIvfPqAdc(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                   m: Int = 8, dims: Int = 64): DataFrame = {
-    val (cb, codes) = pqParts(emb, m, dims)
-    val dtable = adcDistTable(emb, queryIds, m, dims, cb, carryLabel = true)
-    val cellCodes = codes
-      .join(emb.select(col("vec_id"), col("label")), Seq("vec_id"))
-    adcRank(cellCodes.join(broadcast(dtable), Seq("sub", "code"))
-      .filter(col("label") === col("q_label") && col("vec_id") =!= col("q_id")),
-      k)
+  def topK(emb: DataFrame, ann: Ann, queryIds: Seq[Long], k: Int): DataFrame =
+    ann.curve match {
+      case None => search(emb, ann, queryIds, k)
+      case Some(("nprobe", Seq(_))) => search(emb, ann, queryIds, k).drop("nprobe")
+      case Some((key, points)) => throw new IllegalArgumentException(
+        s"topK serves one search; a $key axis of $points is a recall curve")
+    }
+
+  /** Recall@k of `ann` against its truth (SURVEY §2.10 X24 — the audit
+    * every ANN deployment reads before trusting a pruned or compressed
+    * path): `(q_id, n_brute, n_hit, recall)` per query, plus the curve
+    * key per point when `ann` has one. The truth is the un-pruned
+    * search with the same code, so a cell filter's number is what the
+    * PRUNING costs in the metric the index serves (monotone in
+    * `nprobe`, exactly 1.0 at an over-provisioned point); an un-pruned
+    * SQ or PQ search is audited against exact L2 (what the
+    * compression costs), a truncated one against full-dimension
+    * cosine. Keeping those axes apart is what makes either number
+    * actionable. ONE plan per call: truth once, the search once over
+    * the whole curve axis, and the audit join keyed by
+    * (point, q_id, vec_id).
+    */
+  def recall(emb: DataFrame, ann: Ann, queryIds: Seq[Long], k: Int): DataFrame = {
+    val truthCode = (ann.coarse, ann.code) match {
+      case (Coarse.All, Code.Sq | Code.Pq(_, _)) => Code.L2
+      case (Coarse.All, Code.Truncated(_*)) => Code.Cosine
+      case (Coarse.All, code) => throw new IllegalArgumentException(
+        s"an exact $code search is its own truth — nothing to audit")
+      case (_, code) => code
+    }
+    val truth = search(emb, Ann(Coarse.All, truthCode), queryIds, k)
+      .select("q_id", "vec_id")
+    val approx = search(emb, ann, queryIds, k)
+    ann.curve match {
+      case None =>
+        recallAgainstBrute(truth, approx.select("q_id", "vec_id"), Seq("q_id"))
+          .select("q_id", "n_brute", "n_hit", "recall")
+      case Some((key, points)) =>
+        val spark = emb.sparkSession
+        import spark.implicits._
+        recallAgainstBrute(
+          truth.crossJoin(broadcast(points.map(_.toLong).toDF(key))),
+          approx.select(key, "q_id", "vec_id"), Seq(key, "q_id"))
+          .select("q_id", "n_brute", "n_hit", "recall", key)
+    }
   }
 
-  /** Multi-probe IVFADC (Jégou et al. 2011 §IV-C tune in the composed
-    * deployment): the [[topKIvfPqAdc]] chain with the cell restriction
-    * widened to each query's `nprobe` nearest coarse cells
-    * ([[probedCellsMulti]] — the same ranking the plain IVF multi-probe and
-    * the IVF-SQ probe use, so the knob means the same thing across the
-    * whole index family). Everything else is byte-identical to the
-    * single-cell composition: same codebooks, same broadcast ADC
-    * distance table, same rank/tie-break.
-    *
-    * `nprobe ≥ |cells|` degenerates to the un-pruned [[topKPqAdc]]
-    * exactly; probed cell sets are prefixes of one ranking, so recall
-    * against a fixed truth is non-decreasing in `nprobe` — both
-    * spec-pinned. Scale shape: the probe table is broadcast-sized; the
-    * corpus-side work is the (sub, code) equi-join against the
-    * broadcast distance table plus the (q_id, cell) semi-restriction —
-    * `nprobe/|cells|` of the 32×-compressed code table per query, the
-    * original vectors never read.
-    */
-  def topKIvfPqAdcProbed(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                         nprobe: Int = 2, m: Int = 8,
-                         dims: Int = 64): DataFrame =
-    adcProbedMulti(emb, queryIds, k, Seq(nprobe), m, dims).drop("nprobe")
-
-  /** The probed ADC search over the whole probe dimension — shared by
-    * [[topKIvfPqAdcProbed]] and [[adcProbedRecallCurve]] (the same
-    * no-drift reasoning as [[sqProbedMulti]]).
-    */
-  private def adcProbedMulti(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                             nprobes: Seq[Int], m: Int,
-                             dims: Int): DataFrame = {
-    val (cb, codes) = pqParts(emb, m, dims)
-    val dtable = adcDistTable(emb, queryIds, m, dims, cb, carryLabel = false)
-    val cellCodes = codes
-      .join(emb.select(col("vec_id"), col("label")), Seq("vec_id"))
-    adcProbedRank(cellCodes, dtable,
-      probedCellsMulti(emb, queryIds, nprobes), k)
+  /** The pipeline: `(curve key?, q_id, vec_id, rank, score)`. */
+  private def search(emb: DataFrame, ann: Ann, queryIds: Seq[Long],
+                     k: Int): DataFrame = {
+    val keys = ann.curve.map(_._1).toSeq :+ "q_id"
+    val pairs = ann.code match {
+      case Code.Pq(m, dims) => adcCandidates(emb, ann.coarse, queryIds, m, dims)
+      case code => rowCandidates(emb, ann.coarse, code, queryIds)
+    }
+    scoreAndRank(pairs, ann.code, keys, k)
   }
 
-  /** The probed ADC scoring/ranking tail over labeled code rows
-    * (`(vec_id, label, sub, code)`), a broadcast distance table and a
-    * probe table — shared by the inline [[adcProbedMulti]] and the
-    * index-backed [[searchIvfPqAdc]] (whose persisted code table
-    * carries the cell label directly, retiring the inline path's
-    * vec_id→label recovery join).
+  /** Stage 1 for the codes that keep one vector per corpus row (raw or
+    * truncated `vq`, SQ `cv`): the corpus joined to the broadcast query
+    * side the coarse filter allows, the query's vector carried as
+    * `qv`/`qn2`.
     */
-  private def adcProbedRank(cellCodes: DataFrame, dtable: DataFrame,
-                            probes: DataFrame, k: Int): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    adcRank(cellCodes.join(broadcast(dtable), Seq("sub", "code"))
-      .join(broadcast(probes.withColumnRenamed("q_id", "p_qid")),
-        col("q_id") === col("p_qid") && col("label") === col("c_label"))
-      .filter(col("vec_id") =!= col("q_id")),
-      k, withNprobe = true)
+  private def rowCandidates(emb: DataFrame, coarse: Coarse, code: Code,
+                            queryIds: Seq[Long]): DataFrame = {
+    val (corpus, v, n) = code match {
+      case Code.Sq => (sqCoded(emb), "cv", "cn2")
+      case Code.Truncated(dims @ _*) => (truncatedRows(emb, dims), "vq", "n2")
+      case _ => (quantized(emb), "vq", "n2")
+    }
+    def queries(carry: Column*): DataFrame =
+      corpus.filter(col("vec_id").isin(queryIds: _*)).select(
+        (col("vec_id").as("q_id") +: carry) ++
+          Seq(col(v).as("qv"), col(n).as("qn2")): _*)
+    val others = col("vec_id") =!= col("q_id")
+    (coarse, code) match {
+      case (Coarse.All, Code.Truncated(_*)) =>
+        corpus.join(broadcast(queries(col("dims").as("qdims"))),
+          col("dims") === col("qdims")).filter(others)
+      case (Coarse.All, _) =>
+        corpus.crossJoin(broadcast(queries())).filter(others)
+      case (Coarse.Cell, _) =>
+        corpus.join(broadcast(queries(col("label").as("q_label"))),
+          col("label") === col("q_label")).filter(others)
+      case (p: Coarse.Probe, _) =>
+        inProbedCells(corpus, probedCells(emb, queryIds, p).join(queries(), "q_id"))
+      case (lsh: Coarse.SignLsh, _) =>
+        signLshPairs(corpus, queryIds, lsh).join(corpus, "vec_id")
+          .join(broadcast(queries()), "q_id")
+    }
   }
 
-  /** Recall-vs-nprobe tuning curve for IVFADC — the x99 discipline on
-    * [[topKIvfPqAdcProbed]], truth = the un-pruned ADC search
-    * ([[topKPqAdc]]) for the same pruning-cost-only reasoning as
-    * [[sqProbedRecallCurve]] (PQ quantization loss is x117's audit).
-    * Monotone in nprobe, exactly 1.0 at the over-provisioned point.
+  /** `(dims, vec_id, vq, n2)` — the corpus quantized once per prefix
+    * dimension (|dims| quantize+norm evaluations per vector, the
+    * irreducible work of the [[Code.Truncated]] curve).
     */
-  def adcProbedRecallCurve(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                           nprobes: Seq[Int], m: Int = 8,
-                           dims: Int = 64): DataFrame = {
+  private def truncatedRows(emb: DataFrame, dims: Seq[Int]): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val probes = nprobes.map(_.toLong).toDF("nprobe")
-    val truth = topKPqAdc(emb, queryIds, k, m, dims).select("q_id", "vec_id")
-    recallAgainstBrute(truth.crossJoin(broadcast(probes)),
-      adcProbedMulti(emb, queryIds, k, nprobes, m, dims)
-        .select("nprobe", "q_id", "vec_id"),
-      Seq("nprobe", "q_id"))
-      .select("q_id", "n_brute", "n_hit", "recall", "nprobe")
+    emb.crossJoin(broadcast(dims.map(_.toLong).toDF("dims")))
+      .select(col("dims"), col("vec_id"),
+        VecOps.quantize(slice(col("embedding"), lit(1),
+          col("dims").cast("int"))).as("vq"))
+      .withColumn("n2", VecOps.normSq(col("vq")))
   }
 
-  /** Brute-force exact squared-euclidean top-k — the ground truth ADC
-    * approximates (PQ quantizes L2 space, so auditing it against the
-    * cosine brute would conflate metric change with quantization
-    * loss). Same broadcast-query/one-scan shape as [[topKBrute]].
+  /** Stage 1 for [[Code.Pq]]: the corpus code rows joined to the
+    * broadcast ADC distance table on (sub, code), restricted by the
+    * coarse filter — the cell filters recover each code row's cell
+    * with one vec_id equi-join.
     */
-  def topKBruteL2(emb: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
-    val corpus = quantized(emb)
-    val q = corpus.filter(col("vec_id").isin(queryIds: _*)).select(
-      col("vec_id").as("q_id"), col("vq").as("qv"), col("n2").as("qn2"))
-    val w = Window.partitionBy("q_id").orderBy(col("d2").asc, col("vec_id"))
-    corpus.crossJoin(broadcast(q))
+  private def adcCandidates(emb: DataFrame, coarse: Coarse,
+                            queryIds: Seq[Long], m: Int,
+                            dims: Int): DataFrame = {
+    val (cb, codes) = pqParts(emb, m, dims)
+    val dtable = adcDistTableFrom(
+      quantized(emb).filter(col("vec_id").isin(queryIds: _*)),
+      m, dims, cb, carryLabel = coarse == Coarse.Cell)
+    def cellCodes = codes.join(emb.select(col("vec_id"), col("label")),
+      Seq("vec_id"))
+    coarse match {
+      case Coarse.All =>
+        codes.join(broadcast(dtable), Seq("sub", "code"))
+          .filter(col("vec_id") =!= col("q_id"))
+      case Coarse.Cell =>
+        cellCodes.join(broadcast(dtable), Seq("sub", "code"))
+          .filter(col("label") === col("q_label") &&
+            col("vec_id") =!= col("q_id"))
+      case p: Coarse.Probe =>
+        adcInProbedCells(cellCodes, dtable, probedCells(emb, queryIds, p))
+      case other =>
+        throw new IllegalArgumentException(s"ADC has no $other filter")
+    }
+  }
+
+  /** The sign-LSH candidate pairs `(q_id, vec_id)`, distinct. The
+    * anchor pairing needs a total order on ≤ 2B rows — the one
+    * single-partition window here, bounded by parameter choice, never
+    * by corpus size. The hyperplane table is 2·B tiny rows
+    * (broadcast); the bits are a projection of the ONE corpus scan,
+    * folded to `tables` codes by a partial-agg groupBy, and the
+    * candidate join is an equi-join on (table, code) against the
+    * |queries|·tables-row query fingerprint. The per-vector code table
+    * is what a 100 TB deployment PERSISTS (8 bytes × tables per
+    * vector); here it is persisted for the duration of the query so
+    * the query-side lookup does not recompute the corpus scan.
+    */
+  private def signLshPairs(corpus: DataFrame, queryIds: Seq[Long],
+                           lsh: Coarse.SignLsh): DataFrame = {
+    val bitsPerTable = lsh.bitsPerTable
+    val nBits = lsh.tables * bitsPerTable
+    val anchors = corpus.orderBy("vec_id").limit(2 * nBits)
+      .select(col("vec_id"), col("vq"))
+      .withColumn("idx",
+        row_number().over(Window.orderBy("vec_id")) - 1)
+    val hyper = anchors.withColumn("hid", expr("idx div 2"))
+      .groupBy("hid")
+      .agg(max(when(col("idx") % 2 === 0, col("vq"))).as("va"),
+        max(when(col("idx") % 2 === 1, col("vq"))).as("vb"))
+      // a corpus smaller than 2B anchors yields a trailing unpaired
+      // anchor — drop the incomplete pair (the oracle's pair join
+      // drops it identically)
+      .filter(col("va").isNotNull && col("vb").isNotNull)
+      .withColumn("hvec", zip_with(col("va"), col("vb"), (x, y) => x - y))
+      .select("hid", "hvec")
+    val codes = corpus.select("vec_id", "vq").crossJoin(broadcast(hyper))
+      .withColumn("bit",
+        (VecOps.dot(col("vq"), col("hvec")) >= 0L).cast("long"))
+      .withColumn("t", expr(s"hid div $bitsPerTable"))
+      .groupBy("vec_id", "t")
+      .agg(sum(expr(s"bit * shiftleft(1L, hid % $bitsPerTable)"))
+        .as("code"))
+      .persist()
+    val qCodes = codes.filter(col("vec_id").isin(queryIds: _*))
+      .select(col("vec_id").as("q_id"), col("t"), col("code"))
+    codes.join(broadcast(qCodes), Seq("t", "code"))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("d2",
-        col("n2") - lit(2L) * VecOps.dot(col("vq"), col("qv")) + col("qn2"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "vec_id", "rank", "d2")
+      .select("q_id", "vec_id").distinct()
   }
 
-  /** Recall@k of the ADC search against the exact-L2 ground truth —
-    * the audit that says how much the 32× compression costs before a
-    * deployment trusts it (the PQ sibling of [[annRecall]]; same
-    * broadcast audit join).
+  /** Each query's probed cells `(nprobe, q_id, c_label)`, ranked
+    * against centroids learned inline from the corpus.
     */
-  def pqRecall(emb: DataFrame, queryIds: Seq[Long], k: Int,
-               m: Int = 8, dims: Int = 64): DataFrame =
-    recallAgainstBrute(
-      topKBruteL2(emb, queryIds, k).select("q_id", "vec_id"),
-      topKPqAdc(emb, queryIds, k, m, dims).select("q_id", "vec_id"),
-      Seq("q_id"))
-      .select("q_id", "n_brute", "n_hit", "recall")
+  private def probedCells(emb: DataFrame, queryIds: Seq[Long],
+                          probe: Coarse.Probe): DataFrame = {
+    val corpus = quantized(emb)
+    probedCellsCore(
+      corpus.filter(col("vec_id").isin(queryIds: _*))
+        .select(col("vec_id").as("q_id"), col("vq").as("pv"),
+          col("n2").as("pn2")),
+      centroids(corpus), probe)
+  }
+
+  /** The ONE coarse-probe rule, against an EXPLICIT centroid table —
+    * shared by the inline searches ([[probedCells]]: centroids derived
+    * from the corpus) and the index searchers ([[searchIvfSq]],
+    * [[searchIvfPqAdc]]: centroids read from the persisted index), so
+    * the cell ranking is the same computation whichever side the
+    * centroids came from. Each query's cells are ranked by exact int64
+    * squared distance (ties to the lower label) ONCE (`crk`) and each
+    * probe count takes its prefix via the tiny probes-table cross
+    * join — |queries| × k centroid candidates in, ≤ |queries| × Σnprobes
+    * pairs out, so curve points cost probed candidates, never extra
+    * centroid builds.
+    */
+  private def probedCellsCore(q: DataFrame, cent: DataFrame,
+                              probe: Coarse.Probe): DataFrame = {
+    val spark = q.sparkSession
+    import spark.implicits._
+    val probes = probe.nprobes.map(_.toLong).toDF("nprobe")
+    q.crossJoin(broadcast(cent))
+      .withColumn("cd2",
+        col("pn2") - lit(2L) * VecOps.dot(col("pv"), col("cvec")) + col("cn2"))
+      .withColumn("crk", row_number().over(
+        Window.partitionBy("q_id").orderBy(col("cd2"), col("c_label"))))
+      .crossJoin(broadcast(probes))
+      .filter(col("crk") <= col("nprobe"))
+      .select("nprobe", "q_id", "c_label")
+  }
+
+  /** Corpus rows (`label`-carrying) in each query's probed cells — the
+    * probe table `(nprobe, q_id, c_label, qv, qn2)` broadcast on the
+    * cell equi-join, touching `nprobe/|cells|` of the corpus per query.
+    */
+  private def inProbedCells(rows: DataFrame, probed: DataFrame): DataFrame =
+    rows.join(broadcast(probed), col("label") === col("c_label"))
+      .filter(col("vec_id") =!= col("q_id"))
+
+  /** The ADC sibling of [[inProbedCells]] over labeled code rows
+    * `(vec_id, label, sub, code)`: the broadcast distance table on
+    * (sub, code), then the (q_id, cell) restriction by the broadcast
+    * probe table. The index searcher's stored code rows carry the
+    * label directly; the inline path recovers it by a vec_id join.
+    */
+  private def adcInProbedCells(cellCodes: DataFrame, dtable: DataFrame,
+                               probed: DataFrame): DataFrame =
+    cellCodes.join(broadcast(dtable), Seq("sub", "code"))
+      .join(broadcast(probed.withColumnRenamed("q_id", "p_qid")),
+        col("q_id") === col("p_qid") && col("label") === col("c_label"))
+      .filter(col("vec_id") =!= col("q_id"))
+
+  /** Stages 2 and 3: score candidate pairs with the code's scorer and
+    * rank them. The ADC score is the one aggregation — the m
+    * per-subspace lookups summed per (keys, vec_id); ranking is then a
+    * per-query window over an already-reduced frame.
+    */
+  private def scoreAndRank(pairs: DataFrame, code: Code, keys: Seq[String],
+                           k: Int): DataFrame = {
+    def l2(v: String, n: String) =
+      col(n) - lit(2L) * VecOps.dot(col(v), col("qv")) + col("qn2")
+    code match {
+      case Code.Cosine | Code.Truncated(_*) =>
+        rank(pairs.withColumn("cosine", cosExpr), keys, "cosine",
+          ascending = false, k)
+      case Code.L2 =>
+        rank(pairs.withColumn("d2", l2("vq", "n2")), keys, "d2",
+          ascending = true, k)
+      case Code.Sq =>
+        rank(pairs.withColumn("d2", l2("cv", "cn2")), keys, "d2",
+          ascending = true, k)
+      case Code.Pq(_, _) =>
+        rank(pairs.groupBy((keys :+ "vec_id").map(col): _*)
+          .agg(sum("qd2").as("adc_d2")), keys, "adc_d2", ascending = true, k)
+    }
+  }
+
+  /** The ONE per-query top-k: rank `score` within each `keys` group,
+    * the vec_id tie-break making every ranking total, and keep the
+    * first `k` as `(keys, vec_id, rank, score)`.
+    */
+  private def rank(scored: DataFrame, keys: Seq[String], score: String,
+                   ascending: Boolean, k: Int): DataFrame = {
+    require(k > 0, s"k must be positive, got $k")
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy(if (ascending) col(score).asc else col(score).desc,
+        col("vec_id"))
+    scored.withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+      .select((keys ++ Seq("vec_id", "rank", score)).map(col): _*)
+  }
+
+  /** Per-key recall@k of an approximate result set against a truth —
+    * THE audit aggregation, keyed by `keys` (q_id, or (point, q_id) for
+    * a curve). `n_hit` counts truth neighbors the search also returned;
+    * `recall = n_hit / n_brute` is the ONE double division (components
+    * int64-exact, so the output hash-matches any engine). Both inputs
+    * are top-k result sets (k·|queries| rows, times the curve points),
+    * so the join is broadcast-sized regardless of corpus size.
+    */
+  private def recallAgainstBrute(brute: DataFrame, approx: DataFrame,
+                                 keys: Seq[String]): DataFrame =
+    brute.join(broadcast(approx.withColumn("hit", lit(1L))),
+        keys :+ "vec_id", "left")
+      .groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("n_brute"),
+        coalesce(sum("hit"), lit(0L)).as("n_hit"))
+      .withColumn("recall",
+        col("n_hit").cast("double") / col("n_brute").cast("double"))
 
 
   // ----- build-once / search-many persisted indexes ------------------
@@ -1175,7 +951,7 @@ object Similarity {
   // no corpus aggregation of any kind appears in its plan
   // (PlanAuditSpec pins that). Every scoring step is the SAME shared
   // core the inline searches run (probedCellsCore, sqCodeWith,
-  // sdcProbedRank, adcDistTableFrom, adcProbedRank), so
+  // adcDistTableFrom, scoreAndRank), so
   // search-from-tables hash-matches the inline search — the x151/x152
   // CORRECTNESS rows state exactly that against the x147/x148 oracles.
   //
@@ -1892,8 +1668,8 @@ object Similarity {
   /** Search a persisted IVF-SQ index: `queries` supplies
     * `(vec_id, embedding)` rows; the coarse ranking
     * ([[probedCellsCore]]), the query coding ([[sqCodeWith]]) and the
-    * SDC scoring ([[sdcProbedRank]]) are the inline
-    * [[topKIvfSqProbed]]'s own cores run against the index's tables,
+    * SDC scoring ([[inProbedCells]], [[scoreAndRank]]) are the inline
+    * probed [[Code.Sq]] search's own cores run against the index's tables,
     * so the result is row-identical to the inline search over the
     * corpus the index was built from (the x151 oracle row). Per-query
     * cost: |queries|·k coarse candidates + the probed cells' code
@@ -1932,11 +1708,12 @@ object Similarity {
     val probed = probedCellsCore(
       qq.select(col("vec_id").as("q_id"), col("vq").as("pv"),
         col("n2").as("pn2")),
-      cent, Seq(nprobe))
+      cent, Coarse.Probe(nprobe))
     val qcodes = sqCodeWith(qq, params)
       .select(col("vec_id").as("q_id"), col("cv").as("qv"),
         col("cn2").as("qn2"))
-    sdcProbedRank(codes, probed.join(qcodes, "q_id"), k).drop("nprobe")
+    scoreAndRank(inProbedCells(codes, probed.join(qcodes, "q_id")), Code.Sq,
+      Seq("nprobe", "q_id"), k).drop("nprobe")
   }
 
   /** Append new vectors to a persisted IVF-SQ index WITHOUT
@@ -2324,8 +2101,9 @@ object Similarity {
     * steady state: coarse ranking against the stored centroids, the
     * ADC distance table from the stored codebook
     * ([[adcDistTableFrom]]), and the probed ADC ranking over the
-    * stored cell-partitioned code rows ([[adcProbedRank]]) — all the
-    * inline [[topKIvfPqAdcProbed]]'s own cores, so results are
+    * stored cell-partitioned code rows ([[adcInProbedCells]],
+    * [[scoreAndRank]]) — all the inline probed [[Code.Pq]] search's
+    * own cores, so results are
     * row-identical to the inline search (the x152 oracle row). The
     * original float vectors are read for the QUERIES only; the corpus
     * side touches nothing but nprobe/|cells| of the 32×-compressed
@@ -2354,8 +2132,9 @@ object Similarity {
     val probed = probedCellsCore(
       qq.select(col("vec_id").as("q_id"), col("vq").as("pv"),
         col("n2").as("pn2")),
-      cent, Seq(nprobe))
+      cent, Coarse.Probe(nprobe))
     val dtable = adcDistTableFrom(qq, m, dims, cb, carryLabel = false)
-    adcProbedRank(codes, dtable, probed, k).drop("nprobe")
+    scoreAndRank(adcInProbedCells(codes, dtable, probed), Code.Pq(m, dims),
+      Seq("nprobe", "q_id"), k).drop("nprobe")
   }
 }

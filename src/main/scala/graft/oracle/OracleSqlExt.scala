@@ -1172,7 +1172,7 @@ object OracleSqlExt {
     * per-query ranking. ONE definition shared by the x115 result
     * oracle, the x117 recall oracle, and (with `cellRestrict`) the
     * x118 IVFADC oracle — mirroring the engine's shared
-    * `adcDistTable`/`adcRank`, so the two engines' ADC spellings
+    * `adcDistTableFrom`/`scoreAndRank`, so the two engines' ADC spellings
     * cannot drift apart per variant. The rank cutoff is each caller's
     * `WHERE rn <= k`.
     */
@@ -1219,7 +1219,7 @@ object OracleSqlExt {
 
   /** The probe rule over the whole probe dimension —
     * `pcellsm(nprobe, q_id, c_label)`, the crk-prefix-per-curve-point
-    * trick of `Similarity.probedCellsMulti` (and annRecallCurveSql).
+    * trick of `Similarity.probedCellsCore` (and annRecallCurveSql).
     */
   private def probeCtesMulti(queryIds: Seq[Long],
                              nprobes: Seq[Int]): String =
@@ -1274,7 +1274,7 @@ object OracleSqlExt {
        |)""".stripMargin
   }
 
-  /** Mirrors `Similarity.topKPqAdc`. */
+  /** Mirrors `Similarity.topK` over `Ann(Coarse.All, Code.Pq())`. */
   def pqAdcTopKSql(queryIds: Seq[Long], k: Int,
                    m: Int = 8, dims: Int = 64): String =
     pqCte(m, dims) + adcCtes(queryIds, m, dims) +
@@ -1282,7 +1282,7 @@ object OracleSqlExt {
          |SELECT q_id, vec_id, CAST(rn AS BIGINT) AS rank, adc_d2
          |FROM tadc WHERE rn <= $k ORDER BY q_id, rank""".stripMargin
 
-  /** Mirrors `Similarity.topKIvfPqAdc` — the identical ADC chain with
+  /** Mirrors `Similarity.topK` over `Ann(Coarse.Cell, Code.Pq())` — the identical ADC chain with
     * each code row's cell recovered through `e` and restricted to the
     * query's cell before scoring (FAISS-style IVFADC).
     */
@@ -1293,7 +1293,7 @@ object OracleSqlExt {
          |SELECT q_id, vec_id, CAST(rn AS BIGINT) AS rank, adc_d2
          |FROM tadc WHERE rn <= $k ORDER BY q_id, rank""".stripMargin
 
-  /** Mirrors `Similarity.topKIvfPqAdcProbed` — the IVFADC chain with
+  /** Mirrors `Similarity.topK` over `Ann(Coarse.Probe(n), Code.Pq())` — the IVFADC chain with
     * the stored-cell restriction widened to each query's `nprobe`
     * nearest coarse cells ([[probeCtes]]).
     */
@@ -1320,7 +1320,7 @@ object OracleSqlExt {
          |SELECT q_id, vec_id, CAST(rn AS BIGINT) AS rank, adc_d2
          |FROM tadc WHERE rn <= $k ORDER BY q_id, rank""".stripMargin
 
-  /** Mirrors `Similarity.topKBruteL2` — exact squared-euclidean over
+  /** Mirrors `Similarity.topK` over `Ann(Coarse.All, Code.L2)` — exact squared-euclidean over
     * the full quantized vectors, rank ascending with vec_id
     * tie-break. Needs only the quantization CTE — no PQ machinery.
     */
@@ -1352,7 +1352,7 @@ object OracleSqlExt {
       """
         |SELECT vec_id, dim, code FROM coderows ORDER BY vec_id, dim""".stripMargin
 
-  /** Mirrors `Similarity.sqRecall`: SDC top-k over the code vectors vs
+  /** Mirrors `Similarity.recall` over `Ann(Coarse.All, Code.Sq)`: SDC top-k over the code vectors vs
     * the exact-L2 truth — the pqRecallSql audit spelling with the SQ
     * codes CTE.
     */
@@ -1405,7 +1405,7 @@ object OracleSqlExt {
          |       CAST(n_hit AS DOUBLE) / CAST(n_brute AS DOUBLE) AS recall
          |FROM agg ORDER BY q_id""".stripMargin
 
-  /** Mirrors `Similarity.topKIvfSq`: cell-pruned SDC over the SQ
+  /** Mirrors `Similarity.topK` over `Ann(Coarse.Cell, Code.Sq)`: cell-pruned SDC over the SQ
     * codes — the sqRecallSql machinery with the label equi-join.
     */
   def ivfSqTopKSql(queryIds: Seq[Long], k: Int, dims: Int = 64): String =
@@ -1436,7 +1436,7 @@ object OracleSqlExt {
          |SELECT q_id, vec_id, CAST(rn AS BIGINT) AS rank, d2
          |FROM ranked WHERE rn <= $k ORDER BY q_id, rank""".stripMargin
 
-  /** Mirrors `Similarity.topKIvfSqProbed`: the ivfSqTopKSql machinery
+  /** Mirrors `Similarity.topK` over `Ann(Coarse.Probe(n), Code.Sq)`: the ivfSqTopKSql machinery
     * with the stored-cell equi-join replaced by the [[probeCtes]]
     * nearest-cells prefix — cell ranking in the original quantized
     * space, SDC scoring in the code space.
@@ -1488,7 +1488,7 @@ object OracleSqlExt {
          |SELECT q_id, vec_id, CAST(rn AS BIGINT) AS rank, d2
          |FROM ranked WHERE rn <= $k ORDER BY q_id, rank""".stripMargin
 
-  /** Mirrors `Similarity.sqProbedRecallCurve`: un-pruned SDC truth
+  /** Mirrors `Similarity.recall` over `Ann(Coarse.Probe(ns: _*), Code.Sq)`: un-pruned SDC truth
     * once, the probed SDC search once over the whole probe dimension
     * (crk prefixes), recall per (nprobe, query).
     */
@@ -1545,7 +1545,7 @@ object OracleSqlExt {
          |       nprobe
          |FROM agg ORDER BY nprobe, q_id""".stripMargin
 
-  /** Mirrors `Similarity.adcProbedRecallCurve`: the adcCtes un-pruned
+  /** Mirrors `Similarity.recall` over `Ann(Coarse.Probe(ns: _*), Code.Pq())`: the adcCtes un-pruned
     * chain is the truth, the probed scoring joins the pcellsm
     * prefixes, recall per (nprobe, query).
     */
@@ -1603,7 +1603,7 @@ object OracleSqlExt {
          |SELECT q_id, vec_id, CAST(rn AS BIGINT) AS rank, d2
          |FROM bl WHERE rn <= $k ORDER BY q_id, rank""".stripMargin
 
-  /** Mirrors `Similarity.pqRecall`: ADC top-k vs exact-L2 top-k,
+  /** Mirrors `Similarity.recall` over `Ann(Coarse.All, Code.Pq())`: ADC top-k vs exact-L2 top-k,
     * the annRecallSql audit spelling.
     */
   def pqRecallSql(queryIds: Seq[Long], k: Int,
@@ -2615,13 +2615,13 @@ object OracleSqlExt {
       |LEFT JOIN sz sb ON sb.source = p.source_b
       |ORDER BY source_a, source_b""".stripMargin
 
-  /** Mirrors `Similarity.annRecall`: both top-k result sets (the x24
+  /** Mirrors `Similarity.recall` over `Ann(Coarse.Cell, Code.Cosine)`: both top-k result sets (the x24
     * brute CTE and the x25 IVF CTE verbatim, sharing `cosineCte`/`q`),
     * then recall@k per query as int64 hit counts with one double
     * division.
     */
   /** The sign-LSH candidate CTEs shared by the x170 top-k and x171
-    * recall mirrors — mirrors `Similarity.topKSignLsh`'s pipeline:
+    * recall mirrors — mirrors `Similarity.signLshPairs`:
     * anchor pairing by vec_id rank, difference hyperplanes, exact
     * int64 sign bits, per-table codes, OR-of-tables candidate join.
     */
@@ -2661,7 +2661,7 @@ object OracleSqlExt {
        |)""".stripMargin
   }
 
-  /** Mirrors `Similarity.topKSignLsh`: the shared candidate CTEs plus
+  /** Mirrors `Similarity.topK` over `Ann(Coarse.SignLsh(t, b), Code.Cosine)`: the shared candidate CTEs plus
     * the exact-cosine re-rank tail every embedding oracle uses.
     */
   def signLshTopKSql(queryIds: Seq[Long], k: Int, tables: Int,
@@ -2676,7 +2676,7 @@ object OracleSqlExt {
          |            JOIN q ON q.q_id = cid.q_id
          |)""".stripMargin + cosineTail(k)
 
-  /** Mirrors `Similarity.signLshRecall`: brute-force ground truth vs
+  /** Mirrors `Similarity.recall` over `Ann(Coarse.SignLsh(t, b), Code.Cosine)`: brute-force ground truth vs
     * the sign-LSH top-k, per-query hit counts — the annRecallSql
     * shape over the LSH candidate set.
     */
@@ -2756,7 +2756,7 @@ object OracleSqlExt {
          |       CAST(n_hit AS DOUBLE) / CAST(n_brute AS DOUBLE) AS recall
          |FROM agg ORDER BY q_id""".stripMargin
 
-  /** Mirrors `Similarity.annRecallCurve`: brute-force ground truth
+  /** Mirrors `Similarity.recall` over `Ann(Coarse.Probe(ns: _*), Code.Cosine)`: brute-force ground truth
     * computed ONCE (`tb`), the query→cell ranking computed ONCE
     * (`qc`), then each curve point (`probes` VALUES row) takes its
     * `crk <= nprobe` cell prefix, runs the probed top-k, and joins
@@ -2765,7 +2765,7 @@ object OracleSqlExt {
     * ≡-brute property as visible data.
     */
   /** Truncated-dimension recall curve — mirror of
-    * `Similarity.truncatedDimRecall`. Slicing the QUANTIZED vector
+    * `Similarity.recall` over `Ann(Coarse.All, Code.Truncated(ds: _*))`. Slicing the QUANTIZED vector
     * equals quantizing the sliced one (quantization is per-element),
     * so the `n` CTE is shared with every other vector oracle; the
     * d-dim engine re-derives norms over the slice.

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.operators.Ingest
+import org.apache.spark.sql.graftshim.Overlap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -128,15 +129,17 @@ object BulkImport {
         // over the same cached gated rows (the fold reads kept rows,
         // never the sink's output; chunk i+1 depends only on the
         // fold) — overlap them so the chunk's two jobs back-fill each
-        // other's stragglers instead of serializing (guide §2.6).
+        // other's stragglers instead of serializing. The sink runs in
+        // the caller's job context (job group, SQL execution id), so a
+        // job-group cancel reaches it too.
         // The await below keeps the loop's observable order: a chunk
         // is fully delivered before the next chunk starts, and a
         // failing sink still fails the import on this iteration.
-        import scala.concurrent.{Await, Future}
+        import scala.concurrent.Await
         import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val sinkF = Future(sink(keptC.unionByName(anchors), i))
-        try {
+        val sinkF = Overlap.future(spark)(
+          sink(keptC.unionByName(anchors), i))
+        val (next, newIds) = try {
           val before = spark.sparkContext.getPersistentRDDs.keySet
           // one aggregation folds the chunk into the seed: the retired
           // two-step (per-chunk newMax groupBy, then a second fold
@@ -146,7 +149,7 @@ object BulkImport {
           // gate-kept times are strictly increasing per metric and above
           // the old seed_ts, so the (max, argmax) over seed ∪ kept has a
           // unique maximum either way
-          val next = seedDf.unionByName(
+          val folded = seedDf.unionByName(
               keptC.select(col("metric"), col("time").as("seed_ts"),
                 col("value").as("seed_v")))
             .groupBy("metric")
@@ -157,15 +160,18 @@ object BulkImport {
           // cache ids (writeBatch caches and releases its batch) —
           // harmless, unpersisting an already-released id is a no-op;
           // the fold's checkpoint blocks are always inside the window
-          val newIds = (spark.sparkContext.getPersistentRDDs.keySet -- before).toSet
-          release(seedRdds)
-          seedRdds = newIds
-          seedDf = next
+          (folded, (spark.sparkContext.getPersistentRDDs.keySet -- before).toSet)
         } finally
           // never leave the sink job racing a caller's failure-path
           // scratch delete — settle it before propagating anything,
           // then surface its own failure
           Await.ready(sinkF, Duration.Inf)
+        // only a SETTLED sink lets the old seed go: the sink job reads
+        // `anchors` from it, and a localCheckpoint cannot be recomputed
+        // once its blocks are released ("Checkpoint block not found")
+        release(seedRdds)
+        seedRdds = newIds
+        seedDf = next
         Await.result(sinkF, Duration.Inf)
       } finally keptC.unpersist()
     } finally release(seedRdds)

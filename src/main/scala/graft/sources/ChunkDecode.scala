@@ -68,19 +68,6 @@ object ChunkDecode {
         col("c.time_delta").as("time_delta"), col("c.value").as("value"))
       .filter(col("metric").isNotNull)
 
-  /** Production source: subscribe to a Kafka topic of JSON DataChunks →
-    * streaming points ready for [[graft.streaming.StreamingIngest.start]].
-    * Untestable in this offline environment (no broker); the payload
-    * path is [[fromKafkaPayload]]∘[[decode]], both covered by tests.
-    */
-  def kafkaPoints(spark: org.apache.spark.sql.SparkSession,
-                  bootstrapServers: String, topic: String): DataFrame =
-    decode(fromKafkaPayload(
-      spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrapServers)
-        .option("subscribe", topic)
-        .load()))
-
   /** Inverse of [[decode]]: group points into per-metric chunks of
     * `chunkRows`, delta-encoding times within each chunk (first delta
     * absolute). Points are chunked in `seq` (arrival) order.

@@ -4,6 +4,7 @@ import graft.core.Intervals
 import graft.operators.Ingest
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Overlap
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming ingest — the reference's live path (SURVEY §3.1)
@@ -696,17 +697,18 @@ class HtaStore(val root: String, val intervalMin: Long) {
       // §2.6). The commit marker still lands only after BOTH writes
       // return — the idempotent-replay contract is untouched, and a
       // crash mid-overlap leaves the same invisible half-batch a
-      // crash mid-sequence did.
-      import scala.concurrent.{Await, Future}
+      // crash mid-sequence did. The raw job runs in the caller's job
+      // context (job group, SQL execution id), so a job-group cancel
+      // reaches it too.
+      import scala.concurrent.Await
       import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
       // no repartition: micro-batches are already metric-hashed by the
       // gate's groupByKey shuffle; partitionBy splits directories and the
       // local sort keeps row groups time-ordered for min/max pruning.
       // day is monotone in time, so sorting (metric, day, time) is the
       // same row order as (metric, time) AND satisfies partitionBy's
       // required (metric, day) prefix — no second sort gets inserted
-      val rawF = Future {
+      val rawF = Overlap.future(spark) {
         batch.filter(!col("anchor"))
           .select("metric", "time", "value")
           .withColumn("day", expr(s"time div $DayNs"))

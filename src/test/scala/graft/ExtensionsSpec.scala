@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.operators.Similarity.{Ann, Coarse, Code}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -198,7 +199,7 @@ class ExtensionsSpec extends AnyFunSuite {
 
   test("brute-force cosine top-k matches a local reference computation") {
     import spark.implicits._
-    val got = Similarity.topKBrute(emb, Seq(0L), 5)
+    val got = Similarity.topK(emb, Ann(Coarse.All, Code.Cosine), Seq(0L), 5)
       .select("vec_id", "rank").as[(Long, Long)].collect().sortBy(_._2).map(_._1)
     val vecs = emb.select(col("vec_id"),
         transform(col("embedding"), x => round(x.cast("double") * 10000).cast("long")).as("v"))
@@ -419,7 +420,7 @@ class ExtensionsSpec extends AnyFunSuite {
   test("IVF top-k is the label-restricted subset of brute force ranking") {
     import spark.implicits._
     val qLabel = emb.filter(col("vec_id") === 0L).select("label").head.getInt(0)
-    val ivf = Similarity.topKIvf(emb, Seq(0L), 5)
+    val ivf = Similarity.topK(emb, Ann(Coarse.Cell, Code.Cosine), Seq(0L), 5)
       .select("vec_id").as[Long].collect().toSet
     val labels = emb.select("vec_id", "label").as[(Long, Int)].collect().toMap
     assert(ivf.forall(labels(_) == qLabel))
@@ -1146,11 +1147,11 @@ class ExtensionsSpec extends AnyFunSuite {
   test("annRecall: hits equal the local brute∩ivf intersection per query") {
     import spark.implicits._
     val ids = Seq(0L, 1L, 2L)
-    val brute = Similarity.topKBrute(emb, ids, 5)
+    val brute = Similarity.topK(emb, Ann(Coarse.All, Code.Cosine), ids, 5)
       .select("q_id", "vec_id").as[(Long, Long)].collect().toSet
-    val ivf = Similarity.topKIvf(emb, ids, 5)
+    val ivf = Similarity.topK(emb, Ann(Coarse.Cell, Code.Cosine), ids, 5)
       .select("q_id", "vec_id").as[(Long, Long)].collect().toSet
-    val got = Similarity.annRecall(emb, ids, 5)
+    val got = Similarity.recall(emb, Ann(Coarse.Cell, Code.Cosine), ids, 5)
       .as[(Long, Long, Long, Double)].collect().sortBy(_._1).toSeq
     assert(got.map(_._1) == ids)
     got.foreach { case (qid, nBrute, nHit, recall) =>
@@ -1165,7 +1166,7 @@ class ExtensionsSpec extends AnyFunSuite {
   test("topKSignLsh: results are cosine-ranked true candidates, and buckets prune") {
     import spark.implicits._
     val ids = Seq(0L, 1L, 2L)
-    val got = Similarity.topKSignLsh(emb, ids, 5)
+    val got = Similarity.topK(emb, Ann(Coarse.SignLsh(), Code.Cosine), ids, 5)
       .as[(Long, Long, Long, Double)].collect()
     assert(got.nonEmpty)
     // per query: ranks are 1..n and cosine non-increasing in rank
@@ -1179,7 +1180,7 @@ class ExtensionsSpec extends AnyFunSuite {
     }
     // the LSH top-k re-rank is exact cosine: any result also in the
     // brute-force top-k must carry the identical cosine
-    val brute = Similarity.topKBrute(emb, ids, 5)
+    val brute = Similarity.topK(emb, Ann(Coarse.All, Code.Cosine), ids, 5)
       .as[(Long, Long, Long, Double)].collect()
       .map(r => (r._1, r._2) -> r._4).toMap
     got.foreach { case (q, v, _, c) =>
@@ -1190,15 +1191,15 @@ class ExtensionsSpec extends AnyFunSuite {
   test("signLshRecall: hits equal the local brute∩lsh intersection; buckets prune the scan") {
     import spark.implicits._
     val ids = Seq(0L, 1L, 2L)
-    val brute = Similarity.topKBrute(emb, ids, 5)
+    val brute = Similarity.topK(emb, Ann(Coarse.All, Code.Cosine), ids, 5)
       .select("q_id", "vec_id").as[(Long, Long)].collect().toSet
-    val lsh = Similarity.topKSignLsh(emb, ids, 5)
+    val lsh = Similarity.topK(emb, Ann(Coarse.SignLsh(), Code.Cosine), ids, 5)
       .select("q_id", "vec_id").as[(Long, Long)].collect().toSet
     // banding genuinely pruned: some query's candidate top-k is not
     // simply the brute top-k (otherwise the fixture proves nothing) —
     // structural, not a recall-quality assertion
     assert(lsh.size <= brute.size)
-    val got = Similarity.signLshRecall(emb, ids, 5)
+    val got = Similarity.recall(emb, Ann(Coarse.SignLsh(), Code.Cosine), ids, 5)
       .as[(Long, Long, Long, Double)].collect().sortBy(_._1).toSeq
     assert(got.map(_._1) == ids)
     got.foreach { case (qid, nBrute, nHit, recall) =>
@@ -1217,7 +1218,7 @@ class ExtensionsSpec extends AnyFunSuite {
     val rows = (0L until 6L).map(i =>
       (i, Array.tabulate(8)(d => (i + 1).toFloat * (d + 1)), i % 2))
     val tiny = rows.toDF("vec_id", "embedding", "label")
-    val got = Similarity.topKSignLsh(tiny, Seq(0L), 3)
+    val got = Similarity.topK(tiny, Ann(Coarse.SignLsh(), Code.Cosine), Seq(0L), 3)
       .as[(Long, Long, Long, Double)].collect()
     assert(got.forall(_._1 == 0L))
     assert(got.map(_._3).sorted.toSeq == (1L to got.length).toSeq)
@@ -1245,18 +1246,18 @@ class ExtensionsSpec extends AnyFunSuite {
     // every vector IS its group centroid (members identical within a
     // label), so the learned codewords reproduce the vectors exactly:
     // quantization error must be 0 on every row, and the ADC distance
-    // table lookups must equal the true distances — topKPqAdc and
-    // topKBruteL2 must agree rank-for-rank including the distance.
+    // table lookups must equal the true distances — the ADC and the
+    // exact-L2 top-k must agree rank-for-rank including the distance.
     val vecs = for (g <- 0 until 4; i <- 0 until 5) yield
       (g * 5L + i, g, Array.fill(64)(g * 0.25f + 0.05f))
     val fix = vecs.toDF("vec_id", "label", "embedding")
     assert(Similarity.pqCodes(fix).filter(col("d2") =!= 0L).count() == 0L)
-    val adc = Similarity.topKPqAdc(fix, Seq(0L), 7)
+    val adc = Similarity.topK(fix, Ann(Coarse.All, Code.Pq()), Seq(0L), 7)
       .as[(Long, Long, Long, Long)].collect().sortBy(_._3)
-    val brute = Similarity.topKBruteL2(fix, Seq(0L), 7)
+    val brute = Similarity.topK(fix, Ann(Coarse.All, Code.L2), Seq(0L), 7)
       .as[(Long, Long, Long, Long)].collect().sortBy(_._3)
     assert(adc.toSeq == brute.toSeq)
-    val rec = Similarity.pqRecall(fix, Seq(0L, 5L), 7)
+    val rec = Similarity.recall(fix, Ann(Coarse.All, Code.Pq()), Seq(0L, 5L), 7)
       .select("recall").as[Double].collect()
     assert(rec.toSeq == Seq(1.0, 1.0))
   }
@@ -1278,7 +1279,7 @@ class ExtensionsSpec extends AnyFunSuite {
     // the prune's defining property; (b) the composed search equals
     // the plain ADC ranking restricted to that cell and re-ranked —
     // pruning changes the candidate set, never the metric.
-    val res = Similarity.topKIvfPqAdc(emb, Seq(0L, 1L, 2L), 5)
+    val res = Similarity.topK(emb, Ann(Coarse.Cell, Code.Pq()), Seq(0L, 1L, 2L), 5)
     val lbl = emb.select(col("vec_id"), col("label"))
     val crossCell = res.join(lbl, "vec_id")
       .join(lbl.select(col("vec_id").as("q_id"), col("label").as("q_label")),
@@ -1286,7 +1287,7 @@ class ExtensionsSpec extends AnyFunSuite {
       .filter(col("label") =!= col("q_label"))
     assert(crossCell.count() == 0L)
     val n = emb.count().toInt
-    val within = Similarity.topKPqAdc(emb, Seq(0L, 1L, 2L), n)
+    val within = Similarity.topK(emb, Ann(Coarse.All, Code.Pq()), Seq(0L, 1L, 2L), n)
       .join(lbl, "vec_id")
       .join(lbl.select(col("vec_id").as("q_id"), col("label").as("q_label")),
         "q_id")
@@ -1308,7 +1309,7 @@ class ExtensionsSpec extends AnyFunSuite {
     val vecs = for (g <- 0 until 4; i <- 0 until 5) yield
       (g * 5L + i, g, Array.fill(64)(g * 0.25f + 0.05f))
     val fix = vecs.toDF("vec_id", "label", "embedding")
-    val got = Similarity.topKIvfPqAdc(fix, Seq(0L), 4)
+    val got = Similarity.topK(fix, Ann(Coarse.Cell, Code.Pq()), Seq(0L), 4)
       .as[(Long, Long, Long, Long)].collect().sortBy(_._3).toSeq
     assert(got == Seq((0L, 1L, 1L, 0L), (0L, 2L, 2L, 0L),
       (0L, 3L, 3L, 0L), (0L, 4L, 4L, 0L)))
@@ -1493,15 +1494,15 @@ class ExtensionsSpec extends AnyFunSuite {
       df.select("q_id", "vec_id").as[(Long, Long)].collect().toSet
     def full(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Long, Double)].collect().toSet
-    val brute = s(Similarity.topKBrute(emb, ids, 5))
+    val brute = s(Similarity.topK(emb, Ann(Coarse.All, Code.Cosine), ids, 5))
     val nCells = emb.select("label").distinct().count().toInt
     // nprobe = |cells| degenerates to brute force exactly — FULL rows,
     // so ranks and cosines are pinned, not just the neighbor set
-    assert(full(Similarity.topKIvfProbe(emb, ids, 5, nCells)) ==
-      full(Similarity.topKBrute(emb, ids, 5)))
+    assert(full(Similarity.topK(emb, Ann(Coarse.Probe(nCells), Code.Cosine), ids, 5)) ==
+      full(Similarity.topK(emb, Ann(Coarse.All, Code.Cosine), ids, 5)))
     // more probes never lose a brute-force hit a narrower probe found
-    val p1 = s(Similarity.topKIvfProbe(emb, ids, 5, 1))
-    val p2 = s(Similarity.topKIvfProbe(emb, ids, 5, 2))
+    val p1 = s(Similarity.topK(emb, Ann(Coarse.Probe(1), Code.Cosine), ids, 5))
+    val p2 = s(Similarity.topK(emb, Ann(Coarse.Probe(2), Code.Cosine), ids, 5))
     assert((p1 & brute).subsetOf(p2 & brute),
       "widening the probe set must not lose true neighbors")
   }
@@ -1516,11 +1517,11 @@ class ExtensionsSpec extends AnyFunSuite {
     // discipline applied to both composed indexes)
     def full(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Long, Long)].collect().toSet
-    assert(full(Similarity.topKIvfSqProbed(emb, ids, 5, nCells)) ==
-      full(Similarity.topKSq(emb, ids, 5)),
+    assert(full(Similarity.topK(emb, Ann(Coarse.Probe(nCells), Code.Sq), ids, 5)) ==
+      full(Similarity.topK(emb, Ann(Coarse.All, Code.Sq), ids, 5)),
       "nprobe >= |cells| must equal un-pruned SDC bit-for-bit")
-    assert(full(Similarity.topKIvfPqAdcProbed(emb, ids, 5, nCells)) ==
-      full(Similarity.topKPqAdc(emb, ids, 5)),
+    assert(full(Similarity.topK(emb, Ann(Coarse.Probe(nCells), Code.Pq()), ids, 5)) ==
+      full(Similarity.topK(emb, Ann(Coarse.All, Code.Pq()), ids, 5)),
       "nprobe >= |cells| must equal un-pruned ADC bit-for-bit")
     // monotone vs the un-pruned truth IN THE SAME METRIC: probed cell
     // sets are prefixes of one centroid ranking, so a truth member a
@@ -1528,14 +1529,14 @@ class ExtensionsSpec extends AnyFunSuite {
     // candidates — which are themselves truth members
     def s(df: org.apache.spark.sql.DataFrame) =
       df.select("q_id", "vec_id").as[(Long, Long)].collect().toSet
-    val sqTruth = s(Similarity.topKSq(emb, ids, 5))
-    assert((s(Similarity.topKIvfSqProbed(emb, ids, 5, 1)) & sqTruth)
-      .subsetOf(s(Similarity.topKIvfSqProbed(emb, ids, 5, 2)) & sqTruth),
+    val sqTruth = s(Similarity.topK(emb, Ann(Coarse.All, Code.Sq), ids, 5))
+    assert((s(Similarity.topK(emb, Ann(Coarse.Probe(1), Code.Sq), ids, 5)) & sqTruth)
+      .subsetOf(s(Similarity.topK(emb, Ann(Coarse.Probe(2), Code.Sq), ids, 5)) & sqTruth),
       "widening the SQ probe set must not lose SDC-truth neighbors")
-    val adcTruth = s(Similarity.topKPqAdc(emb, ids, 5))
-    assert((s(Similarity.topKIvfPqAdcProbed(emb, ids, 5, 1)) & adcTruth)
+    val adcTruth = s(Similarity.topK(emb, Ann(Coarse.All, Code.Pq()), ids, 5))
+    assert((s(Similarity.topK(emb, Ann(Coarse.Probe(1), Code.Pq()), ids, 5)) & adcTruth)
       .subsetOf(
-        s(Similarity.topKIvfPqAdcProbed(emb, ids, 5, 2)) & adcTruth),
+        s(Similarity.topK(emb, Ann(Coarse.Probe(2), Code.Pq()), ids, 5)) & adcTruth),
       "widening the ADC probe set must not lose ADC-truth neighbors")
   }
 
@@ -1544,13 +1545,13 @@ class ExtensionsSpec extends AnyFunSuite {
     val ids = Seq(0L, 1L, 2L)
     val nCells = emb.select("label").distinct().count().toInt
     // single-point equivalence needs no spec: the curve and the
-    // single searches share sqProbedMulti/adcProbedMulti by
+    // single searches share one search pipeline by
     // construction — what is pinned here is the curve's CONTENT: the
     // over-provisioned point equals the un-pruned truth (recall 1.0)
     // and recall never decreases as the probe set widens
     for (curve <- Seq(
-      Similarity.sqProbedRecallCurve(emb, ids, 5, Seq(1, 2, nCells)),
-      Similarity.adcProbedRecallCurve(emb, ids, 5, Seq(1, 2, nCells)))) {
+      Similarity.recall(emb, Ann(Coarse.Probe(1, 2, nCells), Code.Sq), ids, 5),
+      Similarity.recall(emb, Ann(Coarse.Probe(1, 2, nCells), Code.Pq()), ids, 5))) {
       val rows = curve.select("nprobe", "q_id", "recall")
         .as[(Long, Long, Double)].collect()
       assert(rows.length == 9)
@@ -1584,7 +1585,7 @@ class ExtensionsSpec extends AnyFunSuite {
     // single-cell corpus: IVF prunes nothing, so the pruned search IS
     // brute force and recall must be exactly 1 for every query
     val one = emb.withColumn("label", lit(0))
-    val got = Similarity.annRecall(one, Seq(0L, 1L), 3)
+    val got = Similarity.recall(one, Ann(Coarse.Cell, Code.Cosine), Seq(0L, 1L), 3)
       .select("recall").as[Double].collect().toSeq
     assert(got == Seq(1.0, 1.0))
   }
@@ -1659,7 +1660,8 @@ class ExtensionsSpec extends AnyFunSuite {
   test("annRecallCurve: monotone per query, ceiling point is brute (recall 1.0)") {
     import spark.implicits._
     val ids = Seq(0L, 1L, 2L)
-    val curve = Similarity.annRecallCurve(emb, ids, 5, SparkEntry.RecallCurveProbes)
+    val curve = Similarity.recall(emb,
+        Ann(Coarse.Probe(SparkEntry.RecallCurveProbes: _*), Code.Cosine), ids, 5)
       .select("nprobe", "q_id", "n_brute", "n_hit", "recall")
       .as[(Long, Long, Long, Long, Double)].collect()
     assert(curve.length == SparkEntry.RecallCurveProbes.length * ids.length)
@@ -1675,7 +1677,7 @@ class ExtensionsSpec extends AnyFunSuite {
       .forall(_._5 == 1.0))
     // each curve point is exactly the single-point audit at that nprobe
     SparkEntry.RecallCurveProbes.foreach { p =>
-      val point = Similarity.annRecall(emb, ids, 5, Some(p))
+      val point = Similarity.recall(emb, Ann(Coarse.Probe(p), Code.Cosine), ids, 5)
         .select("q_id", "n_hit").as[(Long, Long)].collect().toSet
       assert(curve.filter(_._1 == p.toLong).map(r => (r._2, r._4)).toSet == point)
     }
@@ -1706,7 +1708,7 @@ class ExtensionsSpec extends AnyFunSuite {
         ((col("label") + 1) % nCells).cast("int"))
         .otherwise(col("label")))
     def totalHits(e: org.apache.spark.sql.DataFrame): Long =
-      Similarity.annRecall(e, ids, 5).agg(sum("n_hit")).as[Long].head()
+      Similarity.recall(e, Ann(Coarse.Cell, Code.Cosine), ids, 5).agg(sum("n_hit")).as[Long].head()
     val given = totalHits(corrupted)
     val relabeled = corrupted.drop("label").join(
       Similarity.kmeansIter(corrupted)
@@ -2575,8 +2577,7 @@ class ExtensionsSpec extends AnyFunSuite {
         "a search pinned before the retrain must return the complete " +
           "pre-retrain snapshot")
       assert(rows(search()) ==
-        rows(Similarity.topKIvfSqProbed(emb, Seq(0L, 1L, 2L), 5,
-          nprobe = 2)),
+        rows(Similarity.topK(emb, Ann(Coarse.Probe(2), Code.Sq), Seq(0L, 1L, 2L), 5)),
         "post-retrain searches must serve the retrained index")
       // ... and the grace window is exactly one cycle: the NEXT writer
       // retires everything v4/v5 do not reference — the pre-retrain
@@ -3366,7 +3367,7 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(codes == Seq(
       (0L, 0L, 0L), (0L, 1L, 0L), (1L, 0L, 255L), (1L, 1L, 0L),
       (2L, 0L, 0L), (2L, 1L, 255L), (3L, 0L, 255L), (3L, 1L, 255L)))
-    val rec = Similarity.sqRecall(d, Seq(0L), 3)
+    val rec = Similarity.recall(d, Ann(Coarse.All, Code.Sq), Seq(0L), 3)
       .as[(Long, Long, Long, Double)].collect().toSeq
     assert(rec == Seq((0L, 3L, 3L, 1.0)))
     // corpus sanity on the real fixture: every code is a byte
@@ -3380,9 +3381,9 @@ class ExtensionsSpec extends AnyFunSuite {
     // with every vector in ONE cell the prune is a no-op, so the
     // composed search must equal plain SDC result-for-result
     val one = emb.withColumn("label", lit(0))
-    val ivf = Similarity.topKIvfSq(one, Seq(0L, 1L, 2L), 5)
+    val ivf = Similarity.topK(one, Ann(Coarse.Cell, Code.Sq), Seq(0L, 1L, 2L), 5)
       .as[(Long, Long, Long, Long)].collect().sortBy(r => (r._1, r._3)).toSeq
-    val flat = Similarity.topKSq(one, Seq(0L, 1L, 2L), 5)
+    val flat = Similarity.topK(one, Ann(Coarse.All, Code.Sq), Seq(0L, 1L, 2L), 5)
       .as[(Long, Long, Long, Long)].collect().sortBy(r => (r._1, r._3)).toSeq
     assert(ivf == flat)
     assert(ivf.nonEmpty)
@@ -3390,8 +3391,8 @@ class ExtensionsSpec extends AnyFunSuite {
 
   test("truncatedDimRecall: full-dimension point is the recall-1.0 anchor") {
     import spark.implicits._
-    val got = Similarity.truncatedDimRecall(emb, Seq(0L, 1L, 2L), 5,
-        SparkEntry.TruncDims)
+    val got = Similarity.recall(emb,
+        Ann(Coarse.All, Code.Truncated(SparkEntry.TruncDims: _*)), Seq(0L, 1L, 2L), 5)
       .as[(Long, Long, Long, Double, Long)].collect()
     assert(got.length == SparkEntry.TruncDims.length * 3)
     val full = got.filter(_._5 == 64L)
@@ -3431,12 +3432,12 @@ class ExtensionsSpec extends AnyFunSuite {
       Similarity.buildIvfSqIndex(emb, s"$root/sq")
       assert(full(Similarity.searchIvfSq(spark, s"$root/sq", queries, 5,
           nprobe = 2)) ==
-        full(Similarity.topKIvfSqProbed(emb, ids, 5, nprobe = 2)),
+        full(Similarity.topK(emb, Ann(Coarse.Probe(2), Code.Sq), ids, 5)),
         "IVF-SQ search-from-tables must equal the inline probed search")
       Similarity.buildIvfPqIndex(emb, s"$root/pq")
       assert(full(Similarity.searchIvfPqAdc(spark, s"$root/pq", queries, 5,
           nprobe = 2)) ==
-        full(Similarity.topKIvfPqAdcProbed(emb, ids, 5, nprobe = 2)),
+        full(Similarity.topK(emb, Ann(Coarse.Probe(2), Code.Pq()), ids, 5)),
         "IVFADC search-from-tables must equal the inline probed search")
       // the persisted code tables are cell-partitioned on disk — the
       // layout that makes the probed-cell restriction a partition

@@ -79,14 +79,15 @@ class LayoutSpec extends AnyFunSuite {
       "no shard scattered — the per-epoch salt is not mixing")
   }
 
-  // FIRST among the executing tests on purpose: plan-shape counts
-  // need a CacheManager that holds no matching subtree yet — the
-  // audit tests below persist the shared binned frame, and a scoped
-  // release frees its STORAGE but the cache-plan registration
-  // remains for the session, so a later plan build would substitute
-  // InMemoryRelation (whose rendered cached plan shifts the textual
-  // NLJ count without changing the physical shape being pinned).
   test("x168/x169 plans: only the allowed scalar-seed / metadata NLJs") {
+    // plan-shape counts need a CacheManager that holds no matching
+    // subtree: other tests persist the shared binned frame, and a
+    // scoped release frees its STORAGE but the cache-plan registration
+    // stays, so a later plan build would substitute InMemoryRelation
+    // (whose rendered cached plan shifts the textual NLJ count without
+    // changing the physical shape being pinned) — start from an empty
+    // cache, whatever ran before
+    spark.catalog.clearCache()
     // scoped: x169's plan construction registers its shared-frame
     // persists — release the storage like every other caller (the
     // CacheScope release contract)

@@ -369,7 +369,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("x147/x148 probed composed searches: only the deliberate broadcast NLJs") {
     // every allowed nested loop is a broadcast of a ≤ k-row frame: the
-    // |queries| × k centroid candidate fan of probedCellsMulti (the
+    // |queries| × k centroid candidate fan of probedCells (the
     // same deliberate crossJoin(broadcast(cent)) as x92's Lloyd
     // assignment) and its 1-row probes table, plus — on the SQ side
     // only — the 1-row quantization-params broadcast of sqCoded,

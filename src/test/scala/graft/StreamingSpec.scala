@@ -497,6 +497,81 @@ class StreamingSpec extends AnyFunSuite {
     assert(gotL0.exceptAll(expectL0).isEmpty && expectL0.exceptAll(gotL0).isEmpty)
   }
 
+  test("chunked import: a slow sink still reads its seed's anchors") {
+    // the sink of chunk i reads the anchor rows of the seed folded
+    // through chunk i-1 — a localCheckpoint, unrecoverable once
+    // released. The sink waits before reading, so the seed fold of
+    // chunk i (and any release that followed it) finishes first; the
+    // old seed must stay until the sink has settled
+    val all = (batch1 ++ batch2).toDS().toDF()
+      .select(col("metric"), col("time"), col("value"), col("seq"))
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
+    graft.sources.BulkImport.chunkedGatedChunks(spark, all, 3) { (batch, i) =>
+      if (i > 0) Thread.sleep(2000)
+      val rows = batch.select("anchor").as[Boolean].collect()
+      seen.synchronized {
+        seen += ((i, rows.count(!_).toLong, rows.count(identity).toLong))
+      }
+    }
+    val byChunk = seen.sortBy(_._1).toSeq
+    assert(byChunk.map(_._1) == Seq(0, 1, 2))
+    // chunk 0 has no seed; every later chunk carries one anchor per
+    // metric seen so far
+    assert(byChunk.head._3 == 0L && byChunk.tail.forall(_._3 > 0L), byChunk)
+    val kept = batchReference.count()
+    assert(byChunk.map(_._2).sum == kept, byChunk)
+  }
+
+  test("chunked import: a job-group cancel reaches the overlapped sink job") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    val sc = spark.sparkContext
+    // pool threads created before the caller set its job group carry
+    // no group: start some from this (group-less) thread first, so an
+    // overlapped job that merely inherits properties is caught
+    locally {
+      import scala.concurrent.ExecutionContext.Implicits.global
+      Await.result(Future.sequence((1 to 16).map(_ => Future(Thread.sleep(50)))),
+        30.seconds)
+    }
+    val all = (batch1 ++ batch2).toDS().toDF()
+      .select(col("metric"), col("time"), col("value"), col("seq"))
+    val sinkStarted = new java.util.concurrent.CountDownLatch(1)
+    @volatile var sinkGroup: String = null
+    @volatile var sinkFailure: Throwable = null
+    val canceller = new Thread(() => {
+      if (sinkStarted.await(60, java.util.concurrent.TimeUnit.SECONDS)) {
+        Thread.sleep(500)
+        sc.cancelJobGroup("graft-import")
+      }
+    })
+    sc.setJobGroup("graft-import", "chunked import", interruptOnCancel = true)
+    val t0 = System.nanoTime()
+    try {
+      canceller.start()
+      val e = intercept[Exception] {
+        graft.sources.BulkImport.chunkedGatedChunks(spark, all, 3) { (batch, i) =>
+          sinkGroup = sc.getLocalProperty("spark.jobGroup.id")
+          batch.count()
+          if (i == 0) {
+            sinkStarted.countDown()
+            try sc.parallelize(Seq(1), 1).foreach(_ => Thread.sleep(20000))
+            catch { case t: Throwable => sinkFailure = t; throw t }
+          }
+        }
+      }
+      assert(sinkGroup == "graft-import",
+        "the overlapped sink must run in the caller's job group")
+      assert(sinkFailure != null, "the sink's slow job was not cancelled")
+      assert(String.valueOf(e.getMessage).contains("cancel"), e.getMessage)
+      assert((System.nanoTime() - t0) / 1e9 < 15.0,
+        "the import ran the slow sink job to completion")
+    } finally {
+      sc.clearJobGroup()
+      canceller.join(60000)
+    }
+  }
+
   test("restart from the SAME checkpoint resumes batch ids and stays exact") {
     val store = new HtaStore(mkTmp("hta-samechk"), H)
     val ckpt = mkTmp("ck-same")
